@@ -125,9 +125,9 @@ object Pipeline {
     * is itself a domain with a read-time view is consumed through the
     * view ([[readDomain]] — its LOGICAL output), never the stored
     * sub-grain; roots and view-less domains read their stored rows
-    * directly, zero overhead. Every pipeline path (batch run, streaming
-    * twin, [[rebuildDomain]]) builds its upstream reader here, so no
-    * consumer site can forget the view. */
+    * directly, zero overhead. Both pipeline paths ([[epochStep]],
+    * [[rebuildDomain]]) build their upstream reader here, so no consumer
+    * site can forget the view. */
   private def domainReader(spark: SparkSession, domains: Seq[DomainDef],
       tables: Map[String, LakeTable])(n: String): DataFrame =
     domains.find(_.name == n) match {
@@ -481,97 +481,65 @@ object Pipeline {
         numBuckets, d.keyCols)).toMap
 
   /** Drive the source table AND all domain tables through epochs
-    * [min-watermark+1, maxEpoch] in dependency order. `domains` must be
-    * topologically ordered (each `dependsOn` name appears earlier). */
+    * [min-watermark+1, maxEpoch] in dependency order, one [[epochStep]] per
+    * epoch. `domains` must be topologically ordered (each `dependsOn` name
+    * appears earlier); with none this is the plain WAL replay
+    * ([[Replayer.run]]). `compactEvery = k > 0` is the read-amplification
+    * dial: after every k-th epoch of the run an INCREMENTAL pass folds each
+    * table's buckets holding ≥ k delta files (O(hot buckets), not
+    * O(table)), and one FULL compaction of every table with a delta
+    * backlog ends the run, so the final state is a pure base tier. */
   def run(spark: SparkSession, events: DataFrame, source: LakeTable,
           domains: Seq[DomainDef], tables: Map[String, LakeTable],
           maxEpoch: Long, upToEpoch: Option[Long] = None,
           compactEvery: Int = 0): PipelineReport = {
     validateTopology(domains, tables)
     val stop = upToEpoch.map(u => math.min(u, maxEpoch)).getOrElse(maxEpoch)
-    val start = (source.lastCommittedEpoch +:
-      domains.map(d => tables(d.name).lastCommittedEpoch)).min + 1
+    val all = source +: domains.map(d => tables(d.name))
+    val start = all.map(_.lastCommittedEpoch).min + 1
+    // this feed only covers epochs <= maxEpoch: if an algebraic domain's
+    // pinned post version runs PAST it (a concurrent writer with a LONGER
+    // feed advanced the source mid-run), the interval's touched keys
+    // cannot be produced from here and the fold must fall back to the
+    // pinned full recompute — filtering this feed would silently miss the
+    // foreign epochs' keys and commit a wrong rollup that never
+    // self-heals. A head watermark <= maxEpoch stays exact even when it
+    // exceeds THIS run's stop: epochs are deterministic feed slices, so a
+    // concurrent driver over the same feed commits identical content
+    val eventsBetween = (lo: Long, hi: Long) =>
+      if (hi <= maxEpoch)
+        Some(events.filter(col("epoch") > lo && col("epoch") <= hi))
+      else None
     var compactions = 0
-    var sinceCompact = 0
-    val updates = Seq.newBuilder[TableUpdate]
-
-    (start to stop).foreach { e =>
-      val batch = events.filter(col("epoch") === e)
-      val srcRes = MergeUpsert.mergeEpoch(spark, source, batch, e)
-      updates += TableUpdate("source", e, srcRes)
-
-      // materialize the post-merge source snapshot ONCE per epoch: every
-      // domain restricts the same live state, and without the cache each
-      // would re-run the merge-on-read collapse (5x the scans and
-      // shuffles of the epoch's dominant cost at scale)
-      val snap = source.snapshot(spark)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // upstream domain snapshots are NOT materialized: their restriction
-      // to the affected groups pushes below the latest_by collapse (see
-      // latestPerKey), so each consumer's read is O(affected) — cheaper
-      // at scale than persisting O(table) upstream state per epoch even
-      // when several domains share one upstream. For a VIEWED upstream
-      // (today only `location`) the read adds the view's aggregate on
-      // top: a restriction on the view's grouping columns still pushes
-      // below it (stock PushDownLeftSemiAntiJoin handles grouping-only
-      // conditions) and on below the collapse; one on a derived measure
-      // column would re-aggregate the affected sub-grain — acceptable,
-      // since the sub-grain is itself already O(groups), not O(source)
-      val upstreamSnap: String => DataFrame = domainReader(spark, domains, tables)
-      try domains.foreach { d =>
-        val dTable = tables(d.name)
-        if (dTable.lastCommittedEpoch < e) {
-          // catch-up form: a domain that fell behind unions the affected
-          // groups of every missed epoch into one recomputation
-          val missed = events.filter(col("epoch") > dTable.lastCommittedEpoch
-            && col("epoch") <= e)
-          val bound = affectedKeyBound(source, dTable.lastCommittedEpoch, e)
-          val res = updateDomain(spark, d, dTable, source, snap, upstreamSnap,
-            missed,
-            // this feed only covers epochs <= maxEpoch: if the pinned
-            // post version's watermark runs PAST it (a concurrent writer
-            // with a LONGER feed advanced the source mid-run), the
-            // interval's touched keys cannot be produced from here and
-            // the algebraic fold must fall back to the pinned full
-            // recompute — filtering this feed would silently miss the
-            // foreign epochs' keys and commit a wrong rollup that never
-            // self-heals (the streaming form guards the same case). A
-            // head watermark <= maxEpoch stays exact even when it
-            // exceeds THIS run's stop: epochs are deterministic feed
-            // slices, so a concurrent driver over the same feed commits
-            // identical content
-            (lo, hi) => if (hi <= maxEpoch) Some(events.filter(
-              col("epoch") > lo && col("epoch") <= hi)) else None,
-            e, bound)
-          updates += TableUpdate(d.name, e, res)
-        } else updates += TableUpdate(d.name, e, None)
-      } finally snap.unpersist(blocking = false)
-
-      sinceCompact += 1
-      if (compactEvery > 0 && sinceCompact >= compactEvery && e < stop) {
-        val all = source +: domains.map(d => tables(d.name))
-        if (all.count(t => Maintenance.compactHotBuckets(spark, t,
-          minDeltaFiles = compactEvery).isDefined) > 0) compactions += 1
-        sinceCompact = 0
-      }
+    val updates = (start to stop).flatMap { e =>
+      val ups = epochStep(spark, source, domains, tables, e, eventsBetween)
+      if (compactEvery > 0 && (e - start + 1) % compactEvery == 0 &&
+          e < stop && foldHotBuckets(spark, all, compactEvery))
+        compactions += 1
+      ups
     }
-    if (compactEvery > 0 && start <= stop) {
-      (source +: domains.map(d => tables(d.name))).foreach { t =>
-        if (t.currentManifest.exists(_.deltaFiles.nonEmpty) &&
-          Maintenance.compact(spark, t).isDefined) compactions += 1
-      }
+    if (compactEvery > 0 && start <= stop) all.foreach { t =>
+      if (t.currentManifest.exists(_.deltaFiles.nonEmpty) &&
+        Maintenance.compact(spark, t).isDefined) compactions += 1
     }
-    PipelineReport(updates.result(), compactions)
+    PipelineReport(updates, compactions)
   }
 
-  /** Shared front-door validation for [[run]] and [[applyEpochBatch]]:
-    * dependency order (each `dependsOn` declared earlier) AND DomainDef ↔
-    * existing-table agreement on the merge key — a table's committed
-    * keyCols win over the constructor seed, so a changed DomainDef run
-    * against an old root would otherwise silently re-key rows under the
-    * stale semantics. */
-  private def validateTopology(domains: Seq[DomainDef],
-                               tables: Map[String, LakeTable]): Unit = {
+  /** Incremental maintenance over `tables`: fold every bucket holding ≥ k
+    * delta files. True if any table committed a compaction. Failure (a
+    * lost CAS) is non-fatal: the merge-on-read view is already correct. */
+  private[graft] def foldHotBuckets(spark: SparkSession,
+      tables: Seq[LakeTable], k: Int): Boolean =
+    tables.map(t => Maintenance.compactHotBuckets(spark, t,
+      minDeltaFiles = k).isDefined).contains(true)
+
+  /** Front-door validation for every driver: dependency order (each
+    * `dependsOn` declared earlier) AND DomainDef ↔ existing-table agreement
+    * on the merge key — a table's committed keyCols win over the
+    * constructor seed, so a changed DomainDef run against an old root
+    * would otherwise silently re-key rows under the stale semantics. */
+  private[graft] def validateTopology(domains: Seq[DomainDef],
+                                      tables: Map[String, LakeTable]): Unit = {
     domains.foldLeft(Set.empty[String]) { (seen, d) =>
       require(d.dependsOn.forall(seen.contains),
         s"domain ${d.name} depends on ${d.dependsOn.mkString(",")} — " +
@@ -589,42 +557,64 @@ object Pipeline {
     }
   }
 
-  /** One epoch applied from a single delivered batch — the STREAMING form
-    * (StreamIngest.startPipeline's foreachBatch): Structured Streaming
-    * re-executes a failed batchId with identical content, so a domain is
-    * never more than one epoch behind and the affected-group set is the
-    * batch itself. A domain attached mid-stream (several epochs behind)
-    * must be caught up by the batch [[run]] first — the batch at hand no
-    * longer contains the missed epochs' affected groups. */
-  def applyEpochBatch(spark: SparkSession, batch: DataFrame,
-                      source: LakeTable, domains: Seq[DomainDef],
-                      tables: Map[String, LakeTable],
-                      epoch: Long): Seq[TableUpdate] = {
-    validateTopology(domains, tables)
-    val updates = Seq.newBuilder[TableUpdate]
-    updates += TableUpdate("source", epoch,
-      MergeUpsert.mergeEpoch(spark, source, batch, epoch))
-    val snap = source.snapshot(spark)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  /** THE per-epoch step, shared by every driver ([[run]], hence
+    * [[Replayer.run]], and both [[graft.streaming.StreamIngest]] queries):
+    * merge epoch `e` into the source, then update every domain that lags
+    * `e`, in dependency order.
+    *
+    * `eventsBetween(lo, hi)` yields the events of epochs (lo, hi], or None
+    * when the caller cannot produce them. The batch driver holds its whole
+    * feed up to maxEpoch; the streaming form holds only the batch at hand,
+    * (e-1, e] — Structured Streaming re-executes a failed batchId with
+    * identical content, so a streamed domain is never more than one epoch
+    * behind. The one function gives the source batch, each lagging
+    * domain's affected events (a catch-up unions every missed epoch into
+    * one recomputation), and the algebraic fold's interval. A domain whose
+    * missed epochs are unavailable (attached mid-stream) is refused.
+    *
+    * The post-merge source snapshot is materialized at most once per
+    * epoch, and only when a recompute domain updates: every such domain
+    * restricts the same live state, and without the cache each would
+    * re-run the merge-on-read collapse (the epoch's dominant cost at
+    * scale). Algebraic domains read pinned versions instead, so an epoch
+    * whose lagging domains are all algebraic — or that has none, as in a
+    * plain replay — never builds it. Upstream domain snapshots are NOT
+    * materialized: their restriction to the affected groups pushes below
+    * the latest_by collapse (see latestPerKey), so each consumer's read is
+    * O(affected) — cheaper at scale than persisting O(table) upstream
+    * state per epoch. For a VIEWED upstream (today only `location`) the
+    * read adds the view's aggregate on top: a restriction on the view's
+    * grouping columns still pushes below it and on below the collapse. */
+  private[graft] def epochStep(spark: SparkSession, source: LakeTable,
+      domains: Seq[DomainDef], tables: Map[String, LakeTable], e: Long,
+      eventsBetween: (Long, Long) => Option[DataFrame]): Seq[TableUpdate] = {
+    val batch = eventsBetween(e - 1, e).getOrElse(
+      throw new IllegalArgumentException(s"no events for epoch $e"))
+    // mergeEpoch commits (retrying lost CAS races internally), returns
+    // None for an already-committed epoch, or throws
+    val srcRes = MergeUpsert.mergeEpoch(spark, source, batch, e)
+    var snap: Option[DataFrame] = None
+    def sourceSnap: DataFrame = snap.getOrElse {
+      val s = source.snapshot(spark)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      snap = Some(s)
+      s
+    }
     val upstreamSnap: String => DataFrame = domainReader(spark, domains, tables)
-    try domains.foreach { d =>
-      val dTable = tables(d.name)
-      if (dTable.lastCommittedEpoch < epoch) {
-        require(dTable.lastCommittedEpoch >= epoch - 1,
-          s"domain ${d.name} is at epoch ${dTable.lastCommittedEpoch}, " +
-            s"more than one behind batch $epoch — catch it up with the " +
-            "batch Pipeline.run before streaming")
-        updates += TableUpdate(d.name, epoch,
-          updateDomain(spark, d, dTable, source, snap, upstreamSnap, batch,
-            // the stream holds ONLY this batch: any wider range (a
-            // concurrent writer advanced the source) → algebraic falls
-            // back to the pinned full recompute
-            (lo, hi) => if (lo == epoch - 1 && hi == epoch) Some(batch)
-              else None,
-            epoch, affectedKeyBound(source, epoch - 1, epoch)))
-      } else updates += TableUpdate(d.name, epoch, None)
-    } finally snap.unpersist(blocking = false)
-    updates.result()
+    val updates =
+      try TableUpdate("source", e, srcRes) +: domains.map { d =>
+        val dTable = tables(d.name)
+        TableUpdate(d.name, e,
+          if (dTable.lastCommittedEpoch >= e) None
+          else updateDomain(spark, d, dTable, source, sourceSnap,
+            upstreamSnap, eventsBetween, e))
+      } finally snap.foreach(_.unpersist(blocking = false))
+    // an uncommitted merge must fail the epoch: a streaming checkpoint
+    // advancing past it would lose its events for good
+    updates.foreach(u => u.result.foreach(r => if (!r.committed)
+      throw new IllegalStateException(
+        s"${u.table} epoch $e merged but did not commit")))
+    updates
   }
 
   /** Upper bound on the distinct group keys touched in epochs
@@ -655,32 +645,38 @@ object Pipeline {
         sum
     }
 
-  /** One domain's epoch update, routed by maintenance strategy:
+  /** One domain's epoch update, refused when the events it missed are
+    * unavailable, then routed by maintenance strategy:
     *  - algebraic domains fold contribution deltas ([[algebraicBatchPlan]];
     *    when the fold's pinned inputs are unavailable they fall back to a
     *    FULL recompute-with-tombstones over a version-pinned snapshot —
     *    the affected-GROUP restriction of the generic path is not sound
     *    for them, since their group keys may move);
-    *  - everything else recomputes affected groups ([[domainBatchPlan]]),
-    * tombstones vanished groups, and merges as epoch `e`. */
+    *  - everything else recomputes affected groups ([[domainBatchPlan]])
+    *    over the post-merge source snapshot `snap` (evaluated only on this
+    *    path), tombstones vanished groups, and merges as epoch `e`. */
   private def updateDomain(spark: SparkSession, d: DomainDef,
                            dTable: LakeTable, source: LakeTable,
-                           snap: DataFrame,
+                           snap: => DataFrame,
                            upstreamSnap: String => DataFrame,
-                           affectedEvents: DataFrame,
-                           eventsInRange: (Long, Long) => Option[DataFrame],
-                           e: Long,
-                           affectedBound: Long): Option[MergeUpsert.MergeResult] = {
+                           eventsBetween: (Long, Long) => Option[DataFrame],
+                           e: Long): Option[MergeUpsert.MergeResult] = {
+    val lag = dTable.lastCommittedEpoch
+    val affectedEvents = eventsBetween(lag, e).getOrElse(
+      throw new IllegalArgumentException(
+        s"domain ${d.name} is at epoch $lag, more than one behind batch " +
+          s"$e — catch it up with the batch Pipeline.run before streaming"))
     val (batch, cleanup, extraLineage): (DataFrame, () => Unit, Map[String, String]) =
       if (d.algebraic.isDefined) {
         val postV = source.currentVersion
         val rec = Map(s"srcv_v$e" -> postV.toString)
-        algebraicBatchPlan(spark, d, dTable, source, postV, eventsInRange, e)
+        algebraicBatchPlan(spark, d, dTable, source, postV, eventsBetween, e)
           .map { case (df, cl) => (df, cl, rec) }
           .getOrElse((fullDomainBatch(spark, d, dTable,
             source.snapshotAt(spark, postV), upstreamSnap, e), () => (), rec))
       } else (domainBatchPlan(spark, d, dTable, snap, upstreamSnap,
-        affectedEvents, e, affectedBound), () => (), Map.empty[String, String])
+        affectedEvents, e, affectedKeyBound(source, lag, e)), () => (),
+        Map.empty[String, String])
     try MergeUpsert.mergeEpoch(spark, dTable, batch, e, extraLineage)
     catch {
       case scala.util.control.NonFatal(ex) => throw new RuntimeException(

@@ -1,8 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.lake.{LakeTable, Maintenance, MergeUpsert}
+import graft.lake.{LakeTable, MergeUpsert}
 
 /** Epoch-driven WAL replay loop (SURVEY.md §3.4): plan the next epoch from
   * the checkpointed commit log, run the merge, commit, repeat. Restart-safe:
@@ -33,43 +32,18 @@ object Replayer {
     def bytesWritten: Long = epochs.flatMap(_.result).map(_.bytesWritten).sum
   }
 
-  /** Replay all epochs in [watermark+1, maxEpoch] from the change stream.
-    * `events` must contain an `epoch` column; only the needed epoch range
-    * is scanned per batch (partition-prunable when the stream is stored
-    * partitioned by epoch). `compactEvery = k > 0` runs an incremental
-    * hot-bucket fold (threshold = k delta files) after every k-th
-    * committed epoch AND one full compaction at the end of the run, so
-    * the final state is a pure base tier. */
+  /** Replay all epochs in [watermark+1, maxEpoch] from the change stream:
+    * [[Pipeline.run]] with no domains, i.e. its epoch step and compaction
+    * cadence over the source alone. `events` must contain an `epoch`
+    * column; only the needed epoch range is scanned per batch
+    * (partition-prunable when the stream is stored partitioned by epoch). */
   def run(spark: SparkSession, events: DataFrame, table: LakeTable,
           maxEpoch: Long, upToEpoch: Option[Long] = None,
           compactEvery: Int = 0): RunReport = {
-    val stop = upToEpoch.map(u => math.min(u, maxEpoch)).getOrElse(maxEpoch)
-    val start = table.lastCommittedEpoch + 1
-    var sinceCompact = 0
-    var compactions = 0
-    val reports = (start to stop).map { e =>
-      val batch = events.filter(col("epoch") === e)
-      val r = MergeUpsert.mergeEpoch(spark, table, batch, e)
-      // mergeEpoch either commits (retrying lost CAS races internally),
-      // returns None for an already-committed epoch, or throws — a silent
-      // uncommitted batch can never fall through to the next epoch.
-      r.foreach(res => assert(res.committed,
-        s"epoch $e merge returned uncommitted result"))
-      sinceCompact += 1
-      if (compactEvery > 0 && sinceCompact >= compactEvery && e < stop) {
-        // mid-run maintenance is INCREMENTAL: fold only the buckets whose
-        // delta count crossed the threshold (O(hot buckets), not O(table))
-        if (Maintenance.compactHotBuckets(spark, table,
-            minDeltaFiles = compactEvery).isDefined) compactions += 1
-        sinceCompact = 0
-      }
-      EpochReport(e, r)
-    }
-    if (compactEvery > 0 && reports.nonEmpty &&
-        table.currentManifest.exists(_.deltaFiles.nonEmpty)) {
-      if (Maintenance.compact(spark, table).isDefined) compactions += 1
-    }
-    RunReport(reports, compactions)
+    val rep = Pipeline.run(spark, events, table, Seq.empty, Map.empty,
+      maxEpoch, upToEpoch, compactEvery)
+    RunReport(rep.updates.map(u => EpochReport(u.epoch, u.result)),
+      rep.compactions)
   }
 
   /** Full backfill (S3's `$(isInc)='N'` branch made explicit): drop any

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis primitives for a large-scale training-data pipeline:
-  * token counting, quality scoring, language ID, fingerprinting.
+  * token counting, language ID, fingerprinting.
   *
   * All pure Column compositions (whole-stage-codegen friendly). Each scales
   * linearly per row with no shuffle — the only shuffles appear when callers
@@ -20,12 +20,6 @@ object TextAnalysis {
     when(length(trim(text)) === 0, lit(0))
       .otherwise(WsTokenCount(text))
 
-  /** BPE-ish subword count heuristic: word-pieces + punctuation runs.
-    * A cheap stand-in for a real tokenizer: counts alnum runs and
-    * single punctuation marks, ~ the unit a byte-pair tokenizer splits on. */
-  def subwordCount(text: Column): Column =
-    size(split(trim(text), "(?<=\\W)|(?=\\W)")) // boundary split
-
   /** Mean word length over whitespace tokens (0.0 for empty).
     * `chars` was `length(regexp_replace(trim(text), "\\s+", ""))` — the
     * [[NonWsCharCount]] kernel is the same count (trim only drops spaces,
@@ -34,13 +28,6 @@ object TextAnalysis {
     val chars = NonWsCharCount(text)
     val words = tokenCount(text)
     when(words === 0, lit(0.0)).otherwise(chars.cast("double") / words.cast("double"))
-  }
-
-  /** Ratio of punctuation chars to total chars (0.0 for empty). */
-  def punctRatio(text: Column): Column = {
-    val total = length(text)
-    val punct = total - length(regexp_replace(text, "[\\p{Punct}]", ""))
-    when(total === 0, lit(0.0)).otherwise(punct.cast("double") / total.cast("double"))
   }
 
   /** Occurrences of a literal stopword as a standalone token.
@@ -54,16 +41,6 @@ object TextAnalysis {
     * by the DuckDB oracles of text_quality / lang_id_heuristic. */
   def stopwordHits(text: Column, word: String): Column =
     StopwordCount(text, word)
-
-  /** Composite quality score in [0,1]: length-band * (1 - punct) * stopword
-    * presence. Heuristic mirror of web-corpus quality filters. */
-  def qualityScore(text: Column): Column = {
-    val n = length(text).cast("double")
-    val lengthBand = least(n / lit(200.0), lit(1.0)) // favor >=200 chars
-    val p = lit(1.0) - punctRatio(text)
-    val stop = when(stopwordHits(text, "the") > 0, lit(1.0)).otherwise(lit(0.5))
-    round(lengthBand * p * stop, 6)
-  }
 
   /** n-gram-heuristic language ID over a tiny built-in profile: scores the
     * text against per-language marker tokens and returns the argmax label.

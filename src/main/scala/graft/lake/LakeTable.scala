@@ -3,7 +3,7 @@ package graft.lake
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -125,16 +125,17 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
 
   private def versionPath(v: Long): Path = logDir.resolve(f"v$v%08d.json")
 
-  def currentVersion: Long = {
-    val vs = Using.resource(Files.list(logDir)) { s =>
+  /** Manifest versions in the log directory, unordered. */
+  private def listVersions: Seq[Long] =
+    Using.resource(Files.list(logDir)) { s =>
       s.iterator().asScala
         .map(_.getFileName.toString)
         .filter(n => n.startsWith("v") && n.endsWith(".json"))
         .map(n => n.substring(1, n.length - 5).toLong)
         .toSeq
     }
-    if (vs.isEmpty) 0L else vs.max
-  }
+
+  def currentVersion: Long = listVersions.maxOption.getOrElse(0L)
 
   def currentManifest: Option[Manifest] = {
     val v = currentVersion
@@ -147,16 +148,7 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
 
   /** Manifest versions currently on disk, ascending — a contiguous suffix
     * of the commit history (vacuum drops a prefix). */
-  def versionsOnDisk: Seq[Long] = {
-    val vs = Using.resource(Files.list(logDir)) { s =>
-      s.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("v") && n.endsWith(".json"))
-        .map(n => n.substring(1, n.length - 5).toLong)
-        .toSeq
-    }
-    vs.sorted
-  }
+  def versionsOnDisk: Seq[Long] = listVersions.sorted
 
   /** The LATEST retained manifest version whose epoch watermark is exactly
     * `epoch` — i.e. the table's most-compacted state as of that epoch
@@ -182,9 +174,27 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
     else None
   }
 
+  /** Manifest version `v`. A torn or unparseable file (a crash or disk
+    * fault mid-write, a hand edit) fails with an IllegalStateException
+    * naming the table, the version and the file, never a raw parser
+    * error; a missing file (vacuumed) still throws NoSuchFileException. */
   def readManifest(v: Long): Manifest = {
-    val node = mapper.readTree(Files.readAllBytes(versionPath(v)))
-    val m = Manifest(
+    val path = versionPath(v)
+    val bytes = Files.readAllBytes(path)
+    val m = try parseManifest(mapper.readTree(bytes)) catch {
+      case scala.util.control.NonFatal(ex) => throw new IllegalStateException(
+        s"table $root: manifest version $v ($path) is torn or unparseable " +
+          s"(${ex.getClass.getSimpleName}: ${ex.getMessage})", ex)
+    }
+    require(m.bucketFn == LakeTable.BucketFn,
+      s"table $root was written with bucket function '${m.bucketFn}' but " +
+        s"this engine uses '${LakeTable.BucketFn}' — refusing to read " +
+        "(keys would silently land in wrong buckets); rewrite the table")
+    m
+  }
+
+  private def parseManifest(node: JsonNode): Manifest =
+    Manifest(
       version = node.get("version").asLong(),
       epochWatermark = node.get("epochWatermark").asLong(),
       lastSeq = node.get("lastSeq").asLong(),
@@ -222,12 +232,6 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
           .filter(_ >= 0L).map(_ => node.get("version").asLong()))
         .getOrElse(-1L)
     )
-    require(m.bucketFn == LakeTable.BucketFn,
-      s"table $root was written with bucket function '${m.bucketFn}' but " +
-        s"this engine uses '${LakeTable.BucketFn}' — refusing to read " +
-        "(keys would silently land in wrong buckets); rewrite the table")
-    m
-  }
 
   /** Atomic CAS commit of the next manifest version. Returns false if a
     * concurrent committer won (caller re-reads and decides). */

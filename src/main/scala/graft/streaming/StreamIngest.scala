@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.lake.{LakeTable, MergeUpsert}
+import graft.engine.Pipeline
+import graft.lake.LakeTable
 
 /** Structured-Streaming WAL tail: the always-on variant of the batch
   * [[graft.engine.Replayer]] (which is the `Trigger.AvailableNow`-style
@@ -57,7 +58,8 @@ object StreamIngest {
           "backfill first)")
   }
 
-  /** Start a streaming merge of `walDir` into `table`.
+  /** Start a streaming merge of `walDir` into `table`: [[startPipeline]]
+    * with no domains.
     *
     * @param trigger `Trigger.AvailableNow()` to drain-and-stop (batch
     *                cadence, the reference's daily 22:00 run made exact) or
@@ -68,52 +70,32 @@ object StreamIngest {
   def start(spark: SparkSession, walDir: String, schema: StructType,
             table: LakeTable, checkpointDir: String,
             trigger: Trigger = Trigger.AvailableNow(),
-            maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .map(n => reader.option("maxFilesPerTrigger", n)).getOrElse(reader)
-      .parquet(walDir)
-    src.writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // epoch := batchId — Structured Streaming's replay contract makes
-        // this the idempotency key; the event's own epoch column is payload.
-        // An uncommitted merge MUST fail the batch: if the streaming
-        // checkpoint advanced past an unmerged epoch, those events would be
-        // silently lost forever (mergeEpoch retries lost CAS races
-        // internally, so a non-committed result here is a real fault).
-        val r = MergeUpsert.mergeEpoch(batch.sparkSession, table, batch, batchId)
-        r match {
-          case Some(res) if !res.committed =>
-            throw new IllegalStateException(
-              s"batch $batchId merged but failed to commit — failing the " +
-                "batch so Structured Streaming re-executes it")
-          case None => assertSkipIsReplay(table, batch, batchId)
-          case _ => ()
-        }
-        ()
-      }
-      .start()
-  }
+            maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    startPipeline(spark, walDir, schema, table, Seq.empty, Map.empty,
+      checkpointDir, trigger, maxFilesPerTrigger)
 
-  /** The streaming form of the MULTI-TABLE pipeline: each micro-batch
+  /** The streaming form of the MULTI-TABLE pipeline: each micro-batch runs
+    * [[Pipeline.epochStep]] over the batch alone, epoch = batchId — it
     * merges the source table AND updates every domain table in dependency
-    * order ([[graft.engine.Pipeline.applyEpochBatch]]), epoch = batchId.
-    * Exactly-once composes per TABLE: a crash between domain commits
-    * re-executes the whole batchId, and each table's lineage registry
-    * skips its already-committed (table, epoch) pairs — the same
-    * mid-pipeline resume the batch Replayer gets from the min-watermark
-    * restart, here provided by Structured Streaming's deterministic
-    * re-delivery. `compactEvery` folds hot buckets of ALL tables every k
-    * batches (incremental, O(hot buckets)). */
+    * order. epoch := batchId because Structured Streaming's replay
+    * contract makes it the idempotency key; the event's own epoch column
+    * is payload. Exactly-once composes per TABLE: a crash between domain
+    * commits re-executes the whole batchId, and each table's lineage
+    * registry skips its already-committed (table, epoch) pairs — the same
+    * mid-pipeline resume the batch [[Pipeline.run]] gets from the
+    * min-watermark restart, here provided by Structured Streaming's
+    * deterministic re-delivery. A domain more than one epoch behind the
+    * stream fails the batch: catch it up with [[Pipeline.run]] first.
+    * `compactEvery` folds hot buckets of ALL tables every k batches
+    * (incremental, O(hot buckets)). */
   def startPipeline(spark: SparkSession, walDir: String, schema: StructType,
-                    source: LakeTable,
-                    domains: Seq[graft.engine.Pipeline.DomainDef],
+                    source: LakeTable, domains: Seq[Pipeline.DomainDef],
                     tables: Map[String, LakeTable], checkpointDir: String,
                     trigger: Trigger = Trigger.AvailableNow(),
                     maxFilesPerTrigger: Option[Int] = None,
                     compactEvery: Int = 0): StreamingQuery = {
+    Pipeline.validateTopology(domains, tables)
+    val all = source +: domains.map(d => tables(d.name))
     val reader = spark.readStream.schema(schema)
     val src = maxFilesPerTrigger
       .map(n => reader.option("maxFilesPerTrigger", n)).getOrElse(reader)
@@ -122,21 +104,15 @@ object StreamIngest {
       .trigger(trigger)
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ups = graft.engine.Pipeline.applyEpochBatch(
-          batch.sparkSession, batch, source, domains, tables, batchId)
-        ups.foreach(u => u.result.foreach(res =>
-          if (!res.committed) throw new IllegalStateException(
-            s"batch $batchId table ${u.table} merged but failed to " +
-              "commit — failing the batch for re-execution")))
-        // the SOURCE skip is the checkpoint-reset hazard (domain skips are
-        // derived recomputations, keyed off the same source watermark)
-        if (ups.exists(u => u.table == "source" && u.result.isEmpty))
-          assertSkipIsReplay(source, batch, batchId)
-        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1) {
-          val all = source +: domains.map(d => tables(d.name))
-          all.foreach(t => graft.lake.Maintenance.compactHotBuckets(
-            batch.sparkSession, t, minDeltaFiles = compactEvery))
-        }
+        val ups = Pipeline.epochStep(batch.sparkSession, source, domains,
+          tables, batchId, (lo, hi) =>
+            if (lo == batchId - 1 && hi == batchId) Some(batch) else None)
+        // the SOURCE skip (the step's first update) is the checkpoint-reset
+        // hazard; domain skips are derived recomputations, keyed off the
+        // same source watermark
+        if (ups.head.result.isEmpty) assertSkipIsReplay(source, batch, batchId)
+        if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
+          Pipeline.foldHotBuckets(batch.sparkSession, all, compactEvery)
         ()
       }
       .start()

@@ -134,6 +134,32 @@ class StreamIngestSpec extends SparkSpec {
       == DomainOracle.codeValueLines(st))
   }
 
+  test("the streaming pipeline refuses a domain more than one epoch behind " +
+      "the stream: its missed epochs are not in the batch at hand") {
+    import graft.engine.Pipeline
+    val wal = tmpDir("lwal"); val ckpt = tmpDir("lckpt")
+    val source = new LakeTable(tmpDir("llake"), 8)
+    writeWal(wal, cfg, 0, 2000) // 4 files → one batch each
+    StreamIngest.start(spark, wal, walSchema, source, ckpt,
+      Trigger.AvailableNow(), maxFilesPerTrigger = Some(1)).awaitTermination()
+    assert(source.lastCommittedEpoch >= 1)
+    // a domain attached mid-stream: fresh (epoch -1), while the next batch
+    // is at least epoch 2
+    val domains = Pipeline.omopDomains(spark).filter(_.name == "person")
+    val tables = Pipeline.openDomainTables(tmpDir("ldom"), domains, 4)
+    writeWal(wal, cfg, 2000, cfg.numEvents)
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamIngest.startPipeline(spark, wal, walSchema, source, domains,
+        tables, ckpt, maxFilesPerTrigger = Some(1)).awaitTermination()
+    }
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Seq.empty else t +: chain(t.getCause)
+    assert(chain(ex).exists(c => Option(c.getMessage).exists(m =>
+      m.contains("domain person is at epoch -1, more than one behind") &&
+        m.contains("catch it up with the batch Pipeline.run"))), ex)
+    assert(tables("person").lastCommittedEpoch == -1)
+  }
+
   test("re-running a fully-drained stream with a fresh checkpoint is a harmless replay") {
     val wal = tmpDir("wal")
     val table = new LakeTable(tmpDir("lake"), 8)
