@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.lake.{LakeTable, Maintenance, MergeUpsert}
 import graft.transform.Domains
@@ -497,15 +498,10 @@ object Pipeline {
     val stop = upToEpoch.map(u => math.min(u, maxEpoch)).getOrElse(maxEpoch)
     val all = source +: domains.map(d => tables(d.name))
     val start = all.map(_.lastCommittedEpoch).min + 1
-    // this feed only covers epochs <= maxEpoch: if an algebraic domain's
-    // pinned post version runs PAST it (a concurrent writer with a LONGER
-    // feed advanced the source mid-run), the interval's touched keys
-    // cannot be produced from here and the fold must fall back to the
-    // pinned full recompute — filtering this feed would silently miss the
-    // foreign epochs' keys and commit a wrong rollup that never
-    // self-heals. A head watermark <= maxEpoch stays exact even when it
-    // exceeds THIS run's stop: epochs are deterministic feed slices, so a
-    // concurrent driver over the same feed commits identical content
+    // the source batch and the recompute domains' affected events; this
+    // feed covers epochs <= maxEpoch only. The bounds stay literals so
+    // the filter pushes down to Parquet row groups (algebraic domains
+    // take their touched keys from the source's delta commits instead)
     val eventsBetween = (lo: Long, hi: Long) =>
       if (hi <= maxEpoch)
         Some(events.filter(col("epoch") > lo && col("epoch") <= hi))
@@ -567,10 +563,10 @@ object Pipeline {
     * feed up to maxEpoch; the streaming form holds only the batch at hand,
     * (e-1, e] — Structured Streaming re-executes a failed batchId with
     * identical content, so a streamed domain is never more than one epoch
-    * behind. The one function gives the source batch, each lagging
-    * domain's affected events (a catch-up unions every missed epoch into
-    * one recomputation), and the algebraic fold's interval. A domain whose
-    * missed epochs are unavailable (attached mid-stream) is refused.
+    * behind. The one function gives the source batch and each lagging
+    * recompute domain's affected events (a catch-up unions every missed
+    * epoch into one recomputation). A domain whose missed epochs are
+    * unavailable (attached mid-stream) is refused.
     *
     * The post-merge source snapshot is materialized at most once per
     * epoch, and only when a recompute domain updates: every such domain
@@ -648,10 +644,10 @@ object Pipeline {
   /** One domain's epoch update, refused when the events it missed are
     * unavailable, then routed by maintenance strategy:
     *  - algebraic domains fold contribution deltas ([[algebraicBatchPlan]];
-    *    when the fold's pinned inputs are unavailable they fall back to a
-    *    FULL recompute-with-tombstones over a version-pinned snapshot —
-    *    the affected-GROUP restriction of the generic path is not sound
-    *    for them, since their group keys may move);
+    *    a fresh domain, or one whose pinned pre-state is unavailable,
+    *    takes a FULL recompute-with-tombstones over a version-pinned
+    *    snapshot — the affected-GROUP restriction of the generic path is
+    *    not sound for them, since their group keys may move);
     *  - everything else recomputes affected groups ([[domainBatchPlan]])
     *    over the post-merge source snapshot `snap` (evaluated only on this
     *    path), tombstones vanished groups, and merges as epoch `e`. */
@@ -666,22 +662,21 @@ object Pipeline {
       throw new IllegalArgumentException(
         s"domain ${d.name} is at epoch $lag, more than one behind batch " +
           s"$e — catch it up with the batch Pipeline.run before streaming"))
-    val (batch, cleanup, extraLineage): (DataFrame, () => Unit, Map[String, String]) =
-      if (d.algebraic.isDefined) {
+    val (batch, extraLineage) = d.algebraic match {
+      case Some(_) =>
         val postV = source.currentVersion
-        val rec = Map(s"srcv_v$e" -> postV.toString)
-        algebraicBatchPlan(spark, d, dTable, source, postV, eventsBetween, e)
-          .map { case (df, cl) => (df, cl, rec) }
-          .getOrElse((fullDomainBatch(spark, d, dTable,
-            source.snapshotAt(spark, postV), upstreamSnap, e), () => (), rec))
-      } else (domainBatchPlan(spark, d, dTable, snap, upstreamSnap,
-        affectedEvents, e, affectedKeyBound(source, lag, e)), () => (),
+        (algebraicBatchPlan(spark, d, dTable, source, postV, e).getOrElse(
+          fullDomainBatch(spark, d, dTable, source.snapshotAt(spark, postV),
+            upstreamSnap, e)), Map(s"srcv_v$e" -> postV.toString))
+      case None => (domainBatchPlan(spark, d, dTable, snap, upstreamSnap,
+        affectedEvents, e, affectedKeyBound(source, lag, e)),
         Map.empty[String, String])
+    }
     try MergeUpsert.mergeEpoch(spark, dTable, batch, e, extraLineage)
     catch {
       case scala.util.control.NonFatal(ex) => throw new RuntimeException(
         s"domain ${d.name} failed at epoch $e: ${ex.getMessage}", ex)
-    } finally cleanup()
+    }
   }
 
   /** Full recompute-with-tombstones of one domain from a source snapshot,
@@ -702,50 +697,6 @@ object Pipeline {
     withMergeOrdering(fresh, dels, e)
   }
 
-  /** The DELTA-FOLD batch for an algebraic domain at epoch `e`, or None if
-    * the fold's inputs are unavailable — the caller then takes the
-    * (version-pinned) full-recompute path. Unavailable means: the
-    * pre-state manifest was vacuumed, the source schema changed inside
-    * the interval, or the caller cannot produce the interval's events
-    * (the streaming form holds only one batch).
-    *
-    * VERSION PINNING — the fold's exactness invariant. Both reads are
-    * pinned to explicit manifest versions, never "current state":
-    * post = `readAt(postV)` (the version the caller sampled), pre =
-    * `readAt(the version recorded when the domain committed its own
-    * watermark epoch)`. Every algebraic commit records its post version
-    * in the domain's lineage (`srcv_v<e>`), so the invariant
-    * "domain@L == rollup(source@srcv_v L)" survives the two cases where
-    * `versionAtEpoch(L)` would lie:
-    *  - catch-up after the source ran AHEAD: the first catch-up epoch
-    *    folds to rollup(head) using every key touched up to the PINNED
-    *    head watermark (`eventsInRange(L, srcE)`), and the remaining
-    *    catch-up epochs fold zero deltas — exact, and cheaper than
-    *    re-folding per epoch;
-    *  - a CONCURRENT driver advancing the source mid-update (the raced
-    *    duplicate-pipeline scenario): the pinned post version makes the
-    *    recorded state self-describing regardless of interleaving.
-    * `versionAtEpoch(L)` remains the fallback pre-resolution for tables
-    * whose epoch L predates lineage recording.
-    *
-    * Shape (and why it is O(batch) even for a global rollup):
-    *  1. the touched keys are the interval's distinct merge keys; their
-    *     BUCKET set is collected (bounded by the table's bucket count in
-    *     every regime — never key-grain data) to prune both source scans;
-    *  2. each touched key's live row contributes `(+1 count, +sums)`
-    *     under post and negated under pre; one partial+final hash
-    *     aggregate per group key yields the per-group delta. A key whose
-    *     GROUP MOVED (e.g. lang drift) appears under its old group in pre
-    *     and its new group in post — decrement and increment both land;
-    *  3. zero-delta groups drop out (no rewrite of probed-but-unchanged
-    *     groups); existing domain rows of the remaining groups are
-    *     semi-join-restricted and folded in with a second group-grain
-    *     aggregate; count ≤ 0 with an existing row → delete tombstone.
-    * The delta frame is persisted for the duration of the merge (it feeds
-    * both the restriction and the fold — without the cache the pre/post
-    * scans would run twice); the returned cleanup unpersists it. Both
-    * semi-joins follow the same broadcast-vs-distributed size gate as the
-    * recompute path. */
   /** left_semi restriction on `names` with NULL-SAFE key equality. A
     * usingColumns semi-join compiles to EqualTo, which never matches a
     * NULL key — but `groupBy` treats NULL as a real group (code_value's
@@ -766,90 +717,120 @@ object Pipeline {
       .reduce(_ && _), "left_semi")
   }
 
+  /** The DELTA-FOLD batch for an algebraic domain at epoch `e`, or None if
+    * the fold does not apply — the caller then takes the (version-pinned)
+    * full-recompute path. That happens for a fresh domain (pre = ∅, so
+    * the full rollup of `postV` IS the fold), when the pre-state manifest
+    * was vacuumed, or when the source schema changed inside the interval.
+    *
+    * VERSION PINNING — the fold's exactness invariant. Every input is read
+    * from pinned manifest versions, never "current state" or the event
+    * feed: post = `readAt(postV)` (the version the caller sampled), pre =
+    * `readAt(the version recorded when the domain committed its own
+    * watermark epoch)`. Every algebraic commit records its post version
+    * in the domain's lineage (`srcv_v<e>`), so the invariant
+    * "domain@L == rollup(source@srcv_v L)" survives the two cases where
+    * `versionAtEpoch(L)` would lie:
+    *  - catch-up after the source ran AHEAD: the first catch-up epoch
+    *    folds to rollup(head) over every key the source changed up to the
+    *    pinned head, and the remaining catch-up epochs fold zero deltas —
+    *    exact, and cheaper than re-folding per epoch;
+    *  - a CONCURRENT driver advancing the source mid-update (the raced
+    *    duplicate-pipeline scenario, or a writer with a longer feed): the
+    *    pinned post version makes the recorded state self-describing
+    *    regardless of interleaving.
+    * `versionAtEpoch(L)` remains the fallback pre-resolution for tables
+    * whose epoch L predates lineage recording.
+    *
+    * Shape (and why it is O(batch) even for a global rollup):
+    *  1. the touched keys are the keys of the delta files the source added
+    *     between the two pinned versions ([[LakeTable.addedDeltaFiles]]),
+    *     even where compaction has since folded them into base; their
+    *     BUCKET set comes from the manifests (no Spark job) and prunes
+    *     both source scans. Below the size gate the keys are collected
+    *     once into a LocalRelation both semi-joins broadcast;
+    *  2. each touched key's live row contributes `(+1 count, +sums)`
+    *     under post and negated under pre; one partial+final hash
+    *     aggregate per group key yields the per-group delta. A key whose
+    *     GROUP MOVED (e.g. lang drift) appears under its old group in pre
+    *     and its new group in post — decrement and increment both land;
+    *  3. zero-delta groups drop out (no rewrite of probed-but-unchanged
+    *     groups); existing domain rows of the remaining groups are
+    *     semi-join-restricted and folded in with a second group-grain
+    *     aggregate; count ≤ 0 with an existing row → delete tombstone.
+    * The delta frame feeds both the restriction and the fold through one
+    * shuffle exchange, which adaptive execution reuses, so it is not
+    * cached. */
   private[graft] def algebraicBatchPlan(spark: SparkSession, d: DomainDef,
       dTable: LakeTable, source: LakeTable, postV: Long,
-      eventsInRange: (Long, Long) => Option[DataFrame],
-      e: Long): Option[(DataFrame, () => Unit)] = {
+      e: Long): Option[DataFrame] = {
     val spec = d.algebraic.get
     val groupNames = d.groupExprs.map(_._1)
-    val srcKeys = source.keyCols
     val contribs: Seq[(String, Column)] = spec.contribs
     val measureNames = contribs.map(_._1)
 
     val L = dTable.lastCommittedEpoch
-    // the pinned post watermark: on catch-up this may exceed `e`, and the
-    // key restriction must cover everything up to IT (domain@e will equal
-    // rollup(source@postV) — the engine's catch-up convention: a lagging
-    // domain's intermediate epochs may reflect newer source state)
-    val srcE = source.readManifest(postV).epochWatermark
-    val affectedEvents = eventsInRange(L, srcE).getOrElse(return None)
-    val preV: Option[Long] =
-      if (L < 0) None // fresh domain: pre = ∅
-      else {
-        val recorded = dTable.currentManifest
-          .flatMap(_.lineage.get(s"srcv_v$L")).flatMap(_.toLongOption)
-        val v = recorded.orElse(source.versionAtEpoch(L))
-          .filter(source.hasVersion)
-        if (v.isEmpty) return None // vacuumed/unknown → full recompute
-        v
-      }
+    if (L < 0) return None
+    val preV = dTable.currentManifest
+      .flatMap(_.lineage.get(s"srcv_v$L")).flatMap(_.toLongOption)
+      .orElse(source.versionAtEpoch(L))
+      .filter(source.hasVersion)
+      .getOrElse(return None) // vacuumed/unknown → full recompute
 
-    val bound = affectedKeyBound(source, L, srcE)
-    val small = bound <= broadcastGroupLimit
-    val keys0 = affectedEvents.select(srcKeys.map(col): _*).distinct()
-    // bucket pruning for BOTH source scans: the collect is bounded by the
-    // table's bucket count in every regime (never key-grain data)
-    val nb = source.numBuckets
-    val buckets: Option[Set[Int]] = {
-      val bs = keys0.select(MergeUpsert.bucketOf(nb, srcKeys).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
-      if (bs.size >= nb) None else Some(bs)
-    }
+    val postM = source.readManifest(postV)
+    val srcKeys = postM.keyCols
+    // a concurrent run may have pinned a LATER pre version than our post:
+    // the keys that differ are those committed between the two, either way
+    val files = source.addedDeltaFiles(math.min(preV, postV),
+      math.max(preV, postV)).flatMap(_._2)
+    val small = affectedKeyBound(source, L, postM.epochWatermark) <=
+      broadcastGroupLimit
+    val keySchema = StructType(srcKeys.map(postM.schema(_)))
+    val keyScan = spark.read.schema(keySchema).parquet(files.map(_.path): _*)
+    val keys =
+      if (!small) keyScan
+      else {
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(keyScan.collect().distinct.toList.asJava,
+          keySchema)
+      }
+    val buckets = Some(files.map(_.bucket).toSet)
+      .filter(_.size < postM.numBuckets)
     def contributions(df: DataFrame, sign: Long): DataFrame =
-      nullSafeSemi(df, keys0, srcKeys, small)
+      nullSafeSemi(df, keys, srcKeys, small)
         .withColumns(d.groupExprs.toMap)
         .select(groupNames.map(col) ++ contribs.map { case (n, c) =>
           (c * lit(sign)).as(n) }: _*)
 
     val postSnap = source.snapshotAt(spark, postV, buckets)
-    val post = contributions(postSnap, 1L)
-    val preOpt: Option[Option[DataFrame]] = preV match {
-      case None => Some(None)
-      case Some(v) =>
-        val preSnap = source.snapshotAt(spark, v, buckets)
-        // schema drift inside the interval (rename/evolution between the
-        // domain's watermark and now) → conservative full recompute
-        if (preSnap.columns.toSet != postSnap.columns.toSet) None
-        else Some(Some(contributions(preSnap, -1L)))
-    }
-    preOpt.map { pre =>
-      val delta = pre.map(p => post.unionByName(p)).getOrElse(post)
-        .groupBy(groupNames.map(col): _*)
-        .agg(sum(col(measureNames.head)).as(measureNames.head),
-          measureNames.tail.map(n => sum(col(n)).as(n)): _*)
-        .filter(measureNames.map(n => col(n) =!= 0L).reduce(_ || _))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val deltaKeys = delta.select(groupNames.map(col): _*)
-      val existing0 = dTable.snapshot(spark)
-      val tagged = delta.withColumn("__existed", lit(0))
-      val folded0 =
-        if (existing0.columns.isEmpty) tagged
-        else tagged.unionByName(
-          nullSafeSemi(existing0, deltaKeys, groupNames, small)
-          .select(groupNames.map(col) ++ measureNames.map(col): _*)
-          .withColumn("__existed", lit(1)))
-      val folded = folded0.groupBy(groupNames.map(col): _*)
-        .agg(sum(col(measureNames.head)).as(measureNames.head),
-          (measureNames.tail.map(n => sum(col(n)).as(n)) :+
-            max(col("__existed")).as("__existed")): _*)
-      val fresh = folded.filter(col(spec.countName) > 0).drop("__existed")
-      val dels = folded
-        .filter(col(spec.countName) <= 0 && col("__existed") === 1)
-        .select(d.keyCols.map(col): _*)
-      (withMergeOrdering(fresh, dels, e), () => {
-        delta.unpersist(blocking = false); ()
-      })
-    }
+    val preSnap = source.snapshotAt(spark, preV, buckets)
+    // schema drift inside the interval (rename/evolution between the
+    // domain's watermark and now) → conservative full recompute
+    if (preSnap.columns.toSet != postSnap.columns.toSet) return None
+    val delta = contributions(postSnap, 1L)
+      .unionByName(contributions(preSnap, -1L))
+      .groupBy(groupNames.map(col): _*)
+      .agg(sum(col(measureNames.head)).as(measureNames.head),
+        measureNames.tail.map(n => sum(col(n)).as(n)): _*)
+      .filter(measureNames.map(n => col(n) =!= 0L).reduce(_ || _))
+    val deltaKeys = delta.select(groupNames.map(col): _*)
+    val existing0 = dTable.snapshot(spark)
+    val tagged = delta.withColumn("__existed", lit(0))
+    val folded0 =
+      if (existing0.columns.isEmpty) tagged
+      else tagged.unionByName(
+        nullSafeSemi(existing0, deltaKeys, groupNames, small)
+        .select(groupNames.map(col) ++ measureNames.map(col): _*)
+        .withColumn("__existed", lit(1)))
+    val folded = folded0.groupBy(groupNames.map(col): _*)
+      .agg(sum(col(measureNames.head)).as(measureNames.head),
+        (measureNames.tail.map(n => sum(col(n)).as(n)) :+
+          max(col("__existed")).as("__existed")): _*)
+    val fresh = folded.filter(col(spec.countName) > 0).drop("__existed")
+    val dels = folded
+      .filter(col(spec.countName) <= 0 && col("__existed") === 1)
+      .select(d.keyCols.map(col): _*)
+    Some(withMergeOrdering(fresh, dels, e))
   }
 
   /** The (lazy) domain-update batch for epoch `e` — exposed separately
@@ -922,13 +903,15 @@ object Pipeline {
       fresh0.withColumnRenamed("updated_seq", "source_seq") else fresh0
 
   /** Domain rows order on (seq = epoch, commit): recomputation is
-    * deterministic, so re-merging an epoch rewrites identical rows. */
+    * deterministic, so re-merging an epoch rewrites identical rows. The
+    * epoch is an [[graft.functions.EpochParam]], not a literal, so the
+    * generated code is the same in every epoch. */
   private def withMergeOrdering(fresh: DataFrame, delKeys: DataFrame,
                                 e: Long): DataFrame = {
     val batch = fresh.withColumn("op", lit("U"))
       .unionByName(delKeys.withColumn("op", lit("D")),
         allowMissingColumns = true)
-    val withOrd = batch.withColumn("seq", lit(e))
+    val withOrd = batch.withColumn("seq", graft.functions.EpochParam.column(e))
     if (withOrd.columns.contains("commit")) withOrd
     else withOrd.withColumn("commit", lit(""))
   }

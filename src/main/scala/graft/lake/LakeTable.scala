@@ -495,21 +495,34 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
     changesSince(spark, fromVersion, Some(buckets)).filter(pred)
   }
 
+  /** Every manifest version in `(fromVersion, toVersion]`, in order, with
+    * the DELTA-tier files it newly added. Compaction and rename commits
+    * add none; a delta file later folded away by compaction still belongs
+    * to its interval and stays on disk while its manifest is retained
+    * (vacuum drops only a prefix of versions). Every epoch commit writes
+    * one delta row per batch key, tombstones included, so these files
+    * name every key whose state differs between the two versions. */
+  private[graft] def addedDeltaFiles(fromVersion: Long,
+      toVersion: Long): Seq[(Manifest, Seq[ManifestFile])] = {
+    require(Files.exists(versionPath(fromVersion)),
+      s"version $fromVersion of $root does not exist (never committed, " +
+        "or vacuumed past the retention floor)")
+    var prev = readManifest(fromVersion).files.map(_.path).toSet
+    ((fromVersion + 1) to toVersion).map { v =>
+      val m = readManifest(v)
+      val added = m.deltaFiles.filterNot(f => prev.contains(f.path))
+      prev = m.files.map(_.path).toSet
+      (m, added)
+    }
+  }
+
   /** CDC-OUT: the table read as a CHANGE STREAM — every row version
     * committed after manifest `fromVersion`, i.e. the per-epoch winner
     * rows (upserts AND `__deleted` tombstones) of every delta commit in
-    * `(fromVersion, head]`. A downstream consumer holding `snapshotAt
-    * (fromVersion)` reaches the head snapshot by folding these changes
-    * with the same latest-wins collapse the engine uses — the contract
-    * [[graft.TimeTravelSpec]] pins by digest.
-    *
-    * Implementation walks the manifest log and takes each version's
-    * NEWLY-ADDED delta-tier files (compaction commits add only base
-    * files and represent no logical change; a delta file later folded
-    * away by compaction still belongs to the interval's change set and
-    * remains on disk while its manifest is retained). Bounded like time
-    * travel: vacuum's `retainVersions` floor reclaims old manifests and
-    * the files only they reference.
+    * `(fromVersion, head]` ([[addedDeltaFiles]]). A downstream consumer
+    * holding `snapshotAt(fromVersion)` reaches the head snapshot by
+    * folding these changes with the same latest-wins collapse the engine
+    * uses — the contract [[graft.TimeTravelSpec]] pins by digest.
     *
     * Renames: each version's files are canonicalized under THAT
     * version's own manifest (readAt's rule) and then mapped forward to
@@ -521,8 +534,9 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
     * the stream exact across rename + compaction. A mapping that first
     * appears at version w is applied only to files added BEFORE w, so a
     * retired name legitimately re-introduced as a new column later is
-    * never hijacked. */
-  /** `buckets` prunes the interval's delta files to the named buckets
+    * never hijacked.
+    *
+    * `buckets` prunes the interval's delta files to the named buckets
     * before any scan — safe for key-restricted consumers by the same
     * rule as [[snapshot]]'s parameter (a key's every row version hashes
     * to exactly one bucket); [[changesForKeys]] is the keyed wrapper. */
@@ -530,26 +544,19 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
                    buckets: Option[Set[Int]] = None): DataFrame = {
     val head = currentVersion
     require(head > 0, s"$root has no commits")
-    require(Files.exists(versionPath(fromVersion)),
-      s"version $fromVersion of $root does not exist (never committed, " +
-        "or vacuumed past the retention floor)")
+    val commits = addedDeltaFiles(fromVersion, head)
     val headM = readManifest(head)
-    var prev = readManifest(fromVersion).files.map(_.path).toSet
-    // per-version added delta files + first version each alias was seen
-    val groups = Seq.newBuilder[(Manifest, Seq[ManifestFile])]
-    val aliasFirstSeen =
+    val aliasFirstSeen = // first version each alias was seen
       scala.collection.mutable.Map.empty[String, (String, Long)]
-    ((fromVersion + 1) to head).foreach { v =>
-      val m = readManifest(v)
+    commits.foreach { case (m, _) =>
       m.feedAliases.foreach { case (former, canon) =>
         if (!aliasFirstSeen.contains(former))
-          aliasFirstSeen(former) = (canon, v)
+          aliasFirstSeen(former) = (canon, m.version)
       }
-      val added = m.files.filter(f => f.tier == "delta" &&
-        !prev.contains(f.path) && buckets.forall(_.contains(f.bucket)))
-      prev = m.files.map(_.path).toSet
-      if (added.nonEmpty) groups += ((m, added))
     }
+    val groups = commits.map { case (m, added) =>
+      (m, added.filter(f => buckets.forall(_.contains(f.bucket))))
+    }.filter(_._2.nonEmpty)
     // canonical name of column `name` from a version-`v` file, at head:
     // chase rename links that appeared AFTER v (a→b at w1, b→c at w2)
     def headName(name0: String, v: Long): String = {
@@ -564,7 +571,7 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
       name // cycle guard (unreachable: rename chains are acyclic)
     }
     val headFields = headM.schema.fieldNames.toSet
-    val parts = groups.result()
+    val parts = groups
       // one scan per distinct read shape, not per version: the shape is
       // fully determined by (schema, renames, the alias map applied)
       .groupBy { case (m, _) =>

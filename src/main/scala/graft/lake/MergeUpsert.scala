@@ -3,46 +3,6 @@ package graft.lake
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** MERGE of one change-event batch into a [[LakeTable]] as a DELTA commit
-  * (merge-on-read; [[Maintenance.compact]] is the copy-on-write half).
-  *
-  * Semantics (the engine's core contract, north_rule):
-  *  - latest-wins per business key `(repo, path)` ordered by `(seq, commit)`
-  *    — the reference's W1 ROW_NUMBER dedupe
-  *    (/root/reference/Delphi/MSSQL_Vertica_Translations/
-  *     Omop_Incremental_Condition_Ocurrence.sql:71-78) made total-ordered;
-  *  - `op = D` writes a tombstone row; I/U upsert (MERGE fixes the
-  *    reference's acknowledged duplicate-INSERT gap, ArchitecturePlan.md:74);
-  *  - idempotent: re-delivering any subset of already-applied events
-  *    cannot change the final state (same (seq,commit) ⇒ same winner, and
-  *    a duplicate epoch ≤ the manifest watermark is skipped outright);
-  *  - schema evolution: added batch columns union into the target schema
-  *    (missing values NULL); renamed feed columns are normalized to the
-  *    canonical name via the manifest's rename map before merging.
-  *
-  * Scale design — ONE Spark job per epoch, O(batch) work:
-  *  - within-batch compaction is a partial+final hash aggregate
-  *    (ObjectHashAggregate over the custom [[graft.functions.LatestBy]]):
-  *    a hot `(repo,path)` key collapses to one row per map task *before*
-  *    the shuffle — this IS the salting strategy for the skewed upsert
-  *    (SURVEY.md §4.3.3), expressed so AQE needs no rescue;
-  *  - the target is NEVER read at ingest time: the compacted batch lands
-  *    as an immutable delta commit, so per-epoch write amplification is
-  *    O(|batch keys|), not O(|table|) — at 10^10 events copy-on-write at
-  *    bucket grain rewrote essentially the whole table every epoch;
-  *  - `content_sha` is computed AFTER compaction — only winning rows pay
-  *    the sha256;
-  *  - metrics ride on `observe()` over the write — no extra pass, no
-  *    separate stats job, no driver-side footer reads on the hot path;
-  *  - a lost manifest CAS is retried by re-basing on the new head (delta
-  *    files are content-independent of concurrent commits), so racing
-  *    maintenance (compaction/vacuum) never loses events and two
-  *    committers racing the SAME epoch resolve exactly-once (the loser's
-  *    files orphan). Epochs must still be committed in ascending order
-  *    per table — a later epoch overtaking an uncommitted earlier one is
-  *    detected via the per-epoch lineage registry and throws rather than
-  *    silently dropping the earlier batch.
-  */
 /** THE formatter/parser pair for per-epoch lineage registry entries. The
   * entry value is human-readable, but one field is load-bearing machine
   * input: `keys=N` feeds [[graft.engine.Pipeline]]'s broadcast-vs-
@@ -68,6 +28,47 @@ object EpochLineage {
           "format drift between EpochLineage.format and keysOf"))
 }
 
+/** MERGE of one change-event batch into a [[LakeTable]] as a DELTA commit
+  * (merge-on-read; [[Maintenance.compact]] is the copy-on-write half).
+  *
+  * Semantics (the engine's core contract, north_rule):
+  *  - latest-wins per business key `(repo, path)` ordered by `(seq, commit)`
+  *    — the reference's W1 ROW_NUMBER dedupe
+  *    (/root/reference/Delphi/MSSQL_Vertica_Translations/
+  *     Omop_Incremental_Condition_Ocurrence.sql:71-78) made total-ordered;
+  *  - `op = D` writes a tombstone row; I/U upsert (MERGE fixes the
+  *    reference's acknowledged duplicate-INSERT gap, ArchitecturePlan.md:74);
+  *  - idempotent: re-delivering any subset of already-applied events
+  *    cannot change the final state (same (seq,commit) ⇒ same winner, and
+  *    a duplicate epoch ≤ the manifest watermark is skipped outright);
+  *  - schema evolution: added batch columns union into the target schema
+  *    (missing values NULL); renamed feed columns are normalized to the
+  *    canonical name via the manifest's rename map before merging.
+  *
+  * Scale design — O(batch) work in TWO Spark jobs per epoch under AQE
+  * (the compaction's shuffle map stage, then the write):
+  *  - within-batch compaction is a partial+final hash aggregate
+  *    (ObjectHashAggregate over the custom [[graft.functions.LatestBy]]):
+  *    a hot `(repo,path)` key collapses to one row per map task *before*
+  *    the shuffle — this IS the salting strategy for the skewed upsert
+  *    (SURVEY.md §4.3.3), expressed so AQE needs no rescue;
+  *  - the target is NEVER read at ingest time: the compacted batch lands
+  *    as an immutable delta commit, so per-epoch write amplification is
+  *    O(|batch keys|), not O(|table|) — at 10^10 events copy-on-write at
+  *    bucket grain rewrote essentially the whole table every epoch;
+  *  - `content_sha` is computed AFTER compaction — only winning rows pay
+  *    the sha256;
+  *  - metrics ride on `observe()` over the write — no extra pass, no
+  *    separate stats job, no driver-side footer reads on the hot path;
+  *  - a lost manifest CAS is retried by re-basing on the new head (delta
+  *    files are content-independent of concurrent commits), so racing
+  *    maintenance (compaction/vacuum) never loses events and two
+  *    committers racing the SAME epoch resolve exactly-once (the loser's
+  *    files orphan). Epochs must still be committed in ascending order
+  *    per table — a later epoch overtaking an uncommitted earlier one is
+  *    detected via the per-epoch lineage registry and throws rather than
+  *    silently dropping the earlier batch.
+  */
 object MergeUpsert {
 
   /** The source table's merge key. Derived domain tables key on their own
@@ -226,8 +227,9 @@ object MergeUpsert {
     * errors — the engine cannot distinguish incorporated history from a
     * mis-seeded feed, so a feed that genuinely lost its first epochs must
     * be caught upstream of the lake (pinned in ReplaySpec's
-    * first-commit-at-N test). */
-  /** `extraLineage`: caller-supplied lineage entries committed atomically
+    * first-commit-at-N test).
+    *
+    * `extraLineage`: caller-supplied lineage entries committed atomically
     * with the epoch (e.g. the pipeline's pinned-source-version record for
     * algebraic domains). Keys should carry a `_v<n>` suffix so the
     * lineage cap truncates them in age order. */

@@ -335,9 +335,9 @@ class PipelineSpec extends SparkSpec {
     assertDeepDomains(tables2, oracleState)
   }
 
-  test("algebraic fold falls back to a pinned full recompute when a " +
-      "concurrent writer advanced the source past this run's feed " +
-      "(foreign epochs' touched keys are unobtainable here)") {
+  test("algebraic fold stays exact when a concurrent writer advanced " +
+      "the source past this run's feed (the foreign epochs' touched keys " +
+      "come from the source's own delta commits)") {
     val source = new LakeTable(tmpDir("alg-conc-src"), 4)
     val cv = Pipeline.omopDomainsDeep(spark).find(_.name == "code_value").get
     val tables = Pipeline.openDomainTables(tmpDir("alg-conc-dom"), Seq(cv), 4)
@@ -352,10 +352,10 @@ class PipelineSpec extends SparkSpec {
     graft.lake.MergeUpsert.mergeEpoch(spark, source,
       events.filter(col("epoch") === 4), 4L)
     // our run resumes with the SHORT feed: the pinned post version's
-    // watermark (4) exceeds this feed's coverage (maxEpoch = 3), so the
-    // fold cannot produce the interval's touched keys — it must take the
-    // version-pinned full recompute; folding feedA's keys would silently
-    // miss epoch 4's groups and commit a wrong rollup that never
+    // watermark (4) exceeds this feed's coverage (maxEpoch = 3), but the
+    // fold reads the interval's touched keys from the source's delta
+    // commits, so epoch 4's groups are folded too; folding feedA's keys
+    // would silently miss them and commit a wrong rollup that never
     // self-heals
     Pipeline.run(spark, feedA, source, Seq(cv), tables, maxEpoch = 3)
     assert(tables("code_value").lastCommittedEpoch == 3)
@@ -588,6 +588,33 @@ class PipelineSpec extends SparkSpec {
     assert(lines(tables("code_value").snapshot(spark), "lang",
       "n_code_paths", "total_code_chars")
       == DomainOracle.codeValueLines(oracleState))
+  }
+
+  test("algebraic catch-up across source compactions reads the delta " +
+      "files of every version in the interval, not only the head's") {
+    val source = new LakeTable(tmpDir("alg-cmp-src"), 4)
+    val alg = Pipeline.omopDomainsDeep(spark)
+      .filter(d => d.name == "code_value" || d.name == "location")
+    val tables = Pipeline.openDomainTables(tmpDir("alg-cmp-dom"), alg, 2)
+    val events = ChangeGen.stream(spark, cfg).toDF()
+    Pipeline.run(spark, events, source, alg, tables, maxEpoch = 5,
+      upToEpoch = Some(1))
+    val preV = source.currentVersion
+    // the source runs ahead alone, compacting after every epoch and fully
+    // at the end: the interval's delta files are all folded into base,
+    // while every version since the domains' pre-state is retained
+    Replayer.run(spark, events, source, maxEpoch = 5, compactEvery = 1)
+    assert(source.hasVersion(preV))
+    assert(source.currentManifest.get.deltaFiles.isEmpty,
+      "the head must hold no delta files")
+    Pipeline.run(spark, events, source, alg, tables, maxEpoch = 5)
+    assert(lines(tables("code_value").snapshot(spark), "lang",
+      "n_code_paths", "total_code_chars")
+      == DomainOracle.codeValueLines(oracleState), "code_value")
+    val locDef = alg.find(_.name == "location").get
+    assert(lines(Pipeline.readDomain(spark, locDef, tables("location")),
+      "location_dir", "n_location_repos", "n_location_paths")
+      == DomainOracle.locationLines(oracleState), "location")
   }
 
   test("deleting a repo's last path tombstones its derived person row") {

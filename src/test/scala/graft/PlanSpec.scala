@@ -326,42 +326,45 @@ class PlanSpec extends SparkSpec {
     val source = new LakeTable(tmpDir("alg-plan-src"), 8)
     val cv = Pipeline.omopDomainsDeep(spark).find(_.name == "code_value").get
     val tables = Pipeline.openDomainTables(tmpDir("alg-plan-dom"), Seq(cv), 2)
-    val events = (e0 ++ e1).toDF()
+    // a file-backed event frame, so "the fold reads none of its files"
+    // is a real check (the keys come from the source's delta commits)
+    val evDir = tmpDir("alg-plan-events")
+    (e0 ++ e1).toDF().write.mode("overwrite").parquet(evDir)
+    val events = spark.read.parquet(evDir)
+    val eventFiles = events.inputFiles.toSet
+      .map((p: String) => new java.net.URI(p).getPath)
+    assert(eventFiles.nonEmpty)
     Pipeline.run(spark, events, source, Seq(cv), tables, maxEpoch = 0)
     graft.lake.MergeUpsert.mergeEpoch(spark, source,
       events.filter(col("epoch") === 1), 1L)
     val srcFiles = source.currentManifest.get.files.map(_.path).toSet
     assert(srcFiles.size >= 4, "need multiple source buckets to prune across")
-    val (batch, cleanup) = Pipeline.algebraicBatchPlan(spark, cv,
-      tables("code_value"), source, source.currentVersion,
-      (lo, hi) => Some(events.filter(col("epoch") > lo && col("epoch") <= hi)),
-      1L).get
-    // drop the plan's execution-time delta cache BEFORE the first access to
-    // batch.queryExecution: a cached subtree optimizes to InMemoryRelation,
-    // which hides the file scans from inputFiles (the pruning assertion's
-    // whole subject). Recomputing the delta twice is irrelevant at test scale.
-    cleanup()
-    try {
-      val readSrcFiles = batch.inputFiles.toSet
-        .map((p: String) => new java.net.URI(p).getPath)
-        .filter(srcFiles.contains)
-      assert(readSrcFiles.nonEmpty, "the fold must read the touched bucket")
-      assert(readSrcFiles.size < srcFiles.size,
-        s"expected pruned source scans, read all ${srcFiles.size} files")
-      assert(readSrcFiles.forall(f =>
-        "bucket=\\d+".r.findFirstIn(f) ==
-          "bucket=\\d+".r.findFirstIn(readSrcFiles.head)),
-        s"all source files read must come from the touched key's bucket: " +
-          readSrcFiles)
-      val p = batch.queryExecution
-        .explainString(ExplainMode.fromString("formatted"))
-      assert(!p.contains("SortMergeJoin"), p)
-      assert(!p.contains("CartesianProduct"), p)
-      // ... and the fold produces exactly the moved group's delta row
-      val rows = batch.collect()
-      assert(rows.length == 1 && rows.head.getAs[String]("lang") == "scala",
-        rows.mkString(";"))
-    } finally cleanup()
+    val batch = Pipeline.algebraicBatchPlan(spark, cv,
+      tables("code_value"), source, source.currentVersion, 1L).get
+    val readFiles = batch.inputFiles.toSet
+      .map((p: String) => new java.net.URI(p).getPath)
+    val readSrcFiles = readFiles.filter(srcFiles.contains)
+    assert(readSrcFiles.nonEmpty, "the fold must read the touched bucket")
+    assert(readSrcFiles.size < srcFiles.size,
+      s"expected pruned source scans, read all ${srcFiles.size} files")
+    assert(readSrcFiles.forall(f =>
+      "bucket=\\d+".r.findFirstIn(f) ==
+        "bucket=\\d+".r.findFirstIn(readSrcFiles.head)),
+      s"all source files read must come from the touched key's bucket: " +
+        readSrcFiles)
+    assert(readFiles.intersect(eventFiles).isEmpty,
+      s"the fold must not scan the event frame: $readFiles")
+    assert(batch.queryExecution.withCachedData.collect {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }.isEmpty, "the fold plan must hold no cached relation")
+    val p = batch.queryExecution
+      .explainString(ExplainMode.fromString("formatted"))
+    assert(!p.contains("SortMergeJoin"), p)
+    assert(!p.contains("CartesianProduct"), p)
+    // ... and the fold produces exactly the moved group's delta row
+    val rows = batch.collect()
+    assert(rows.length == 1 && rows.head.getAs[String]("lang") == "scala",
+      rows.mkString(";"))
   }
 
   test("j2 left enrichment broadcasts the dimension side") {
