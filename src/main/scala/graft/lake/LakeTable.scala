@@ -5,6 +5,8 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.{BucketingUtils, DataSource}
 import org.apache.spark.sql.functions.{coalesce, col}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -15,8 +17,13 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * Layout:
   * {{{
   *   <root>/_log/v00000001.json ...          // manifest per committed snapshot
-  *   <root>/data/c<version>-<nonce>/bucket=N/part-*.parquet
+  *   <root>/data/c<version>-<nonce>/bucket=N/part-*_0000N.c000.snappy.parquet
   * }}}
+  * Every data file's name carries its bucket id in Spark's bucket-file
+  * form (`_0000N` before the extension, [[listCommitFiles]]), so a read
+  * declares the table's bucketing to Spark and latest-wins collapses run
+  * without a shuffle (see `scan`). Files written before the suffix existed
+  * still read, by a plain scan, until a compaction rewrites them.
   *
   * Storage model is '''delta-append + merge-on-read''' (the Hudi-MoR /
   * Iceberg-v2 shape): each ingested epoch appends one small DELTA commit
@@ -363,13 +370,43 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
     if (files.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
-    else
-      canonicalize(m,
-        spark.read.schema(physicalSchema(m)).parquet(files.map(_.path): _*))
+    else scan(spark, m, files, forCollapse = m.deltaFiles.nonEmpty)
   }
 
-  private def readFrom(spark: SparkSession, m: Manifest,
-                       buckets: Option[Set[Int]]): DataFrame = {
+  /** One canonicalized parquet scan of `files` under manifest `m`. For a
+    * read that a latest-wins collapse runs over (`forCollapse`), when
+    * every file's name carries its manifest bucket (the `_0000N` suffix
+    * [[listCommitFiles]] gives it), the relation declares the table's
+    * bucketing, `BucketSpec(numBuckets, keyCols)`: Spark's bucket id is
+    * the same `pmod(murmur3(keyCols), n)` as [[MergeUpsert.bucketOf]], so
+    * the scan reports `HashPartitioning(keyCols, numBuckets)` and the
+    * collapse (and compaction's repartition) above it needs no exchange.
+    * Any file without the suffix (written before it existed) keeps the
+    * whole scan plain. `spark.sql.sources.bucketing.enabled` still turns
+    * the bucketed scan off, and Spark's auto bucketed scan splits a
+    * declared read by file when nothing above it collapses.
+    *
+    * A read of one row per key (no deltas) declares nothing: over a
+    * bucketed scan Spark first drops compaction's repartition as
+    * redundant, then splits the scan by file because nothing above it
+    * needs clustering, and a bucket would compact to one file per input
+    * split instead of one. */
+  private def scan(spark: SparkSession, m: Manifest, files: Seq[ManifestFile],
+                   forCollapse: Boolean): DataFrame = {
+    val paths = files.map(_.path)
+    val bucketed = forCollapse && files.forall(f => BucketingUtils
+      .getBucketId(Paths.get(f.path).getFileName.toString).contains(f.bucket))
+    val raw =
+      if (bucketed) spark.baseRelationToDataFrame(DataSource(spark, "parquet",
+        paths = paths, userSpecifiedSchema = Some(physicalSchema(m)),
+        bucketSpec = Some(BucketSpec(m.numBuckets, m.keyCols, Nil)))
+        .resolveRelation())
+      else spark.read.schema(physicalSchema(m)).parquet(paths: _*)
+    canonicalize(m, raw)
+  }
+
+  private[lake] def readFrom(spark: SparkSession, m: Manifest,
+                             buckets: Option[Set[Int]]): DataFrame = {
     graft.plans.PushSemiBelowCollapse.ensureInstalled(spark)
     val raw = readRawFrom(spark, m, buckets)
     if (m.deltaFiles.isEmpty || raw.columns.isEmpty) raw
@@ -441,31 +478,35 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
     * rule as [[snapshot]]'s `buckets` parameter). Equality is null-safe
     * (`<=>`), matching the writer's hash of null key components. */
   def lookupKeys(spark: SparkSession, keys: Seq[Seq[Any]]): DataFrame = {
-    val kc = keyCols
-    require(keys.nonEmpty, "lookupKeys: empty key list")
-    require(keys.forall(_.size == kc.size),
-      s"lookupKeys: each key must supply ${kc.size} value(s) for " +
-        s"(${kc.mkString(", ")})")
-    currentManifest match {
+    val head = currentManifest // one version answers the whole call
+    requireKeys("lookupKeys", head.map(_.keyCols).getOrElse(defaultKeyCols),
+      keys)
+    head match {
       case None => spark.emptyDataFrame
       case Some(m) =>
-        val (buckets, pred) = keyBucketsAndPred(spark, m, keys)
-        snapshot(spark, Some(buckets)).filter(pred)
+        val (buckets, pred) = keyBucketsAndPred(m, keys)
+        live(readFrom(spark, m, Some(buckets))).filter(pred)
     }
   }
 
-  /** The bucket set an explicit key list hashes to, and the null-safe
-    * equality predicate selecting exactly those keys — the shared
-    * derivation of [[lookupKeys]] and [[changesForKeys]]. The bucket
-    * evaluates over a one-LocalRelation plan through the SAME Catalyst
-    * expression the writer used. */
-  private def keyBucketsAndPred(spark: SparkSession, m: Manifest,
+  private def requireKeys(op: String, kc: Seq[String],
+                          keys: Seq[Seq[Any]]): Unit = {
+    require(keys.nonEmpty, s"$op: empty key list")
+    require(keys.forall(_.size == kc.size),
+      s"$op: each key must supply ${kc.size} value(s) for " +
+        s"(${kc.mkString(", ")})")
+  }
+
+  /** The bucket set an explicit key list hashes to under manifest `m`,
+    * and the null-safe equality predicate selecting exactly those keys —
+    * the shared derivation of [[lookupKeys]] and [[changesForKeys]]. */
+  private def keyBucketsAndPred(m: Manifest,
       keys: Seq[Seq[Any]]): (Set[Int], Column) = {
-    val kc = keyCols
+    val kc = m.keyCols
     val keySchema = StructType(kc.map(c => m.schema(c)))
     // driver-side through the same Catalyst expression (the keys are
     // already local — no Spark job for <= numBuckets integers)
-    val bucketFn = MergeUpsert.localBucketOf(keySchema, kc, numBuckets)
+    val bucketFn = MergeUpsert.localBucketOf(keySchema, kc, m.numBuckets)
     val buckets = keys.iterator
       .map(k => bucketFn(org.apache.spark.sql.Row(k: _*))).toSet
     val pred = keys.map(k =>
@@ -484,15 +525,12 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
     * folds to [[lookupKeys]]' head state. */
   def changesForKeys(spark: SparkSession, fromVersion: Long,
                      keys: Seq[Seq[Any]]): DataFrame = {
-    val kc = keyCols
-    require(keys.nonEmpty, "changesForKeys: empty key list")
-    require(keys.forall(_.size == kc.size),
-      s"changesForKeys: each key must supply ${kc.size} value(s) for " +
-        s"(${kc.mkString(", ")})")
     val head = currentVersion
     require(head > 0, s"$root has no commits")
-    val (buckets, pred) = keyBucketsAndPred(spark, readManifest(head), keys)
-    changesSince(spark, fromVersion, Some(buckets)).filter(pred)
+    val m = readManifest(head)
+    requireKeys("changesForKeys", m.keyCols, keys)
+    val (buckets, pred) = keyBucketsAndPred(m, keys)
+    changesSince(spark, fromVersion, Some(buckets), head).filter(pred)
   }
 
   /** Every manifest version in `(fromVersion, toVersion]`, in order, with
@@ -517,17 +555,22 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
   }
 
   /** CDC-OUT: the table read as a CHANGE STREAM — every row version
-    * committed after manifest `fromVersion`, i.e. the per-epoch winner
-    * rows (upserts AND `__deleted` tombstones) of every delta commit in
-    * `(fromVersion, head]` ([[addedDeltaFiles]]). A downstream consumer
-    * holding `snapshotAt(fromVersion)` reaches the head snapshot by
-    * folding these changes with the same latest-wins collapse the engine
-    * uses — the contract [[graft.TimeTravelSpec]] pins by digest.
+    * committed after manifest `fromVersion` up to `toVersion` (default:
+    * the head), i.e. the per-epoch winner rows (upserts AND `__deleted`
+    * tombstones) of every delta commit in `(fromVersion, toVersion]`
+    * ([[addedDeltaFiles]]), in `toVersion`'s column names. A downstream
+    * consumer holding `snapshotAt(fromVersion)` reaches
+    * `snapshotAt(toVersion)` by folding these changes with the same
+    * latest-wins collapse the engine uses — the contract
+    * [[graft.TimeTravelSpec]] pins by digest. A caller that already read
+    * the head (e.g. [[graft.streaming.ChangeFeed.poll]], which reports the
+    * interval's renames up to that head) passes it, so a commit landing
+    * meanwhile cannot widen the stream past what the caller reports.
     *
     * Renames: each version's files are canonicalized under THAT
     * version's own manifest (readAt's rule) and then mapped forward to
-    * the head's canonical names via the rename mappings observed across
-    * the interval. Normalizing everything against HEAD alone — the
+    * `toVersion`'s canonical names via the rename mappings observed
+    * across the interval. Normalizing everything against HEAD alone — the
     * previous implementation — silently read a renamed column as NULL
     * for pre-rename change files once a full compaction had cleared the
     * mapping from the head manifest; per-version canonicalization keeps
@@ -541,11 +584,14 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
     * rule as [[snapshot]]'s parameter (a key's every row version hashes
     * to exactly one bucket); [[changesForKeys]] is the keyed wrapper. */
   def changesSince(spark: SparkSession, fromVersion: Long,
-                   buckets: Option[Set[Int]] = None): DataFrame = {
-    val head = currentVersion
-    require(head > 0, s"$root has no commits")
-    val commits = addedDeltaFiles(fromVersion, head)
-    val headM = readManifest(head)
+                   buckets: Option[Set[Int]] = None,
+                   toVersion: Long = currentVersion): DataFrame = {
+    require(toVersion > 0, s"$root has no commits")
+    require(fromVersion <= toVersion,
+      s"changesSince: fromVersion $fromVersion is past toVersion $toVersion")
+    val commits = addedDeltaFiles(fromVersion, toVersion)
+    val headM = commits.lastOption.map(_._1)
+      .getOrElse(readManifest(toVersion))
     val aliasFirstSeen = // first version each alias was seen
       scala.collection.mutable.Map.empty[String, (String, Long)]
     commits.foreach { case (m, _) =>
@@ -581,8 +627,8 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
       .map { case ((_, _, toHead), grp) =>
         val m = grp.head._1
         val files = grp.flatMap(_._2)
-        val df = canonicalize(m,
-          spark.read.schema(physicalSchema(m)).parquet(files.map(_.path): _*))
+        // change rows are latest-wins input (the consumer folds them)
+        val df = scan(spark, m, files, forCollapse = true)
         val renamed = toHead.foldLeft(df) { case (d, (from, to)) =>
           if (from != to) d.withColumnRenamed(from, to) else d
         }
@@ -618,14 +664,21 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
     dataDir.resolve(f"c$version%08d-$nonce")
   }
 
-  /** List parquet files written under a commit dir, keyed by bucket=N.
-    * With `withRowCounts`, row counts come from the parquet footers
-    * (metadata-only read, no data scan) on a dedicated bounded pool;
-    * without it rows are -1 — the per-epoch delta path skips footer I/O
-    * entirely (driver-serial time caps scaling efficiency). */
+  /** List parquet files written under a commit dir, keyed by bucket=N,
+    * first renaming each to Spark's bucket-file form: the bucket id as a
+    * `_0000N` suffix before the extension
+    * (`part-00000-<uuid>_00003.c000.snappy.parquet`), which is where
+    * Spark's bucketed scan reads a file's bucket from. The dir is still
+    * uncommitted (no manifest references it until the CAS), so the rename
+    * leaves the crash protocol as it was. Every file is tagged "base";
+    * the delta writer re-tags. With `withRowCounts`, row counts come from
+    * the parquet footers (metadata-only read, no data scan) on a
+    * dedicated bounded pool; without it rows are -1 — the per-epoch delta
+    * path skips footer I/O entirely (driver-serial time caps scaling
+    * efficiency). */
   def listCommitFiles(dir: Path, withRowCounts: Boolean = false): Seq[ManifestFile] = {
     if (!Files.exists(dir)) return Seq.empty
-    val paths = Using.resource(Files.walk(dir)) { s =>
+    val written = Using.resource(Files.walk(dir)) { s =>
       s.iterator().asScala
         .filter(p => p.getFileName.toString.endsWith(".parquet")).toSeq
     }
@@ -633,19 +686,28 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
       case s if s.startsWith("bucket=") => s.substring(7).toInt
       case _ => 0
     }
-    def tierOf(p: Path): String = "base" // caller re-tags deltas
+    val files = written.map { p =>
+      val b = bucketOf(p)
+      val name = p.getFileName.toString
+      if (BucketingUtils.getBucketId(name).contains(b)) (p, b)
+      else {
+        val (stem, ext) = name.splitAt(name.indexOf('.'))
+        (Files.move(p, p.resolveSibling(
+          stem + BucketingUtils.bucketIdToString(b) + ext)), b)
+      }
+    }
     if (!withRowCounts) {
-      paths.map(p => ManifestFile(p.toString, bucketOf(p), -1L,
-        Files.size(p), tierOf(p)))
+      files.map { case (p, b) =>
+        ManifestFile(p.toString, b, -1L, Files.size(p), "base") }
     } else {
       val conf = new org.apache.hadoop.conf.Configuration()
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, math.max(1, paths.size)))
+        math.min(16, math.max(1, files.size)))
       try {
-        val futures = paths.map { p =>
+        val futures = files.map { case (p, b) =>
           pool.submit(new java.util.concurrent.Callable[ManifestFile] {
-            def call(): ManifestFile = ManifestFile(p.toString, bucketOf(p),
-              footerRowCount(p, conf), Files.size(p), tierOf(p))
+            def call(): ManifestFile = ManifestFile(p.toString, b,
+              footerRowCount(p, conf), Files.size(p), "base")
           })
         }
         futures.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))

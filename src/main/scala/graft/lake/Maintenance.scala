@@ -150,13 +150,16 @@ object Maintenance {
     val nb = current.numBuckets
     val version = current.version + 1
 
-    // merged view (latest-wins collapse over base ∪ deltas, canonical cols)
-    val merged = table.read(spark, buckets)
+    // merged view (latest-wins collapse over base ∪ deltas, canonical
+    // cols) of the very manifest this commit replaces
+    val merged = table.readFrom(spark, current, buckets)
       .filter(!(col("__deleted") && col("updated_seq") <= lit(tombstoneWatermark)))
 
     val commitDir = table.newCommitDir(version)
     // explicit repartition on the key: one reducer per bucket, so each
-    // bucket compacts to exactly one file (bucketOf == partition id)
+    // bucket compacts to exactly one file (bucketOf == partition id). Over
+    // a bucketed read the collapse is already partitioned this way and
+    // Spark drops the exchange as redundant.
     merged.repartition(nb, current.keyCols.map(col): _*)
       .withColumn("bucket", MergeUpsert.bucketOf(nb, current.keyCols))
       .write.mode("overwrite").partitionBy("bucket")

@@ -93,11 +93,17 @@ object MergeUpsert {
     "parquet.enable.dictionary#updated_seq" -> "false")
 
   /** Bucket function = Spark's own HashPartitioning id expression
-    * (`pmod(murmur3(keyCols...), n)`). This is deliberate: the final
-    * aggregate's shuffle already places every row in the partition whose
-    * id equals its bucket (when shuffle.partitions == numBuckets), so the
-    * delta write's `partitionBy("bucket")` needs NO further shuffle.
-    * Identified in the manifest as [[LakeTable.BucketFn]]. */
+    * (`pmod(murmur3(keyCols...), n)`). This is deliberate, and both sides
+    * rely on it: on write, the final aggregate's shuffle already places
+    * every row in the partition whose id equals its bucket (when
+    * shuffle.partitions == numBuckets), so the delta write's
+    * `partitionBy("bucket")` needs NO further shuffle; on read,
+    * [[LakeTable]] declares its files as a Spark bucketed relation on
+    * `keyCols`, and Spark then takes the scan to be hash-partitioned by
+    * this same expression, so latest-wins collapses over it run without
+    * an exchange. Changing it without changing [[LakeTable.BucketFn]]
+    * would make those reads wrong. Identified in the manifest as
+    * [[LakeTable.BucketFn]]. */
   def bucketOf(numBuckets: Int,
                keyCols: Seq[String] = DefaultKeyCols): Column =
     pmod(hash(keyCols.map(col): _*), lit(numBuckets)).cast("int")

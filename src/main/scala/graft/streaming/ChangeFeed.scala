@@ -103,10 +103,12 @@ object ChangeFeed {
     * included) as one increment over (0, head]. */
   def poll(spark: SparkSession, table: LakeTable,
            after: Long): Option[Increment] = {
+    // every part of the increment answers for this one head: a commit
+    // landing meanwhile belongs to the next poll
     val head = table.currentVersion
     if (head <= after) return None
     if (after == 0L)
-      return Some(Increment(0L, head, Seq.empty, table.read(spark)))
+      return Some(Increment(0L, head, Seq.empty, table.readAt(spark, head)))
     if (!table.hasVersion(after))
       throw new IllegalStateException(
         s"change-feed cursor $after of ${table.root} was vacuumed past the " +
@@ -115,7 +117,7 @@ object ChangeFeed {
           "bootstrap over stale state could resurrect keys whose " +
           "tombstones were GC'd)")
     Some(Increment(after, head, renamesIn(table, after, head),
-      table.changesSince(spark, after)))
+      table.changesSince(spark, after, toVersion = head)))
   }
 
   /** Drain the feed: poll-and-consume until the head stops moving (the

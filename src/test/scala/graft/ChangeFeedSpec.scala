@@ -28,6 +28,32 @@ class ChangeFeedSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getString(3), r.getString(4))).toSeq)
 
+  test("changesSince up to a version carries only that version's rows " +
+      "and column names, whatever commits after it") {
+    val source = new LakeTable(tmpDir("feed-upto"), 4)
+    val events = ChangeGen.stream(spark, cfg).toDF()
+    Replayer.run(spark, events, source, maxEpoch = 5, upToEpoch = Some(1))
+    val from = source.currentVersion
+    Replayer.run(spark, events, source, maxEpoch = 5, upToEpoch = Some(2))
+    val v = source.currentVersion
+    val cols = source.changesSince(spark, from).columns.toSeq
+    val rows = digest(source.changesSince(spark, from), "lang")
+    // a rename and an epoch land after v (a poll that read head = v)
+    source.renameColumn("lang", "language")
+    Replayer.run(spark, events.withColumnRenamed("lang", "language"),
+      source, maxEpoch = 5, upToEpoch = Some(3))
+    assert(source.currentVersion > v + 1)
+    val upToV = source.changesSince(spark, from, toVersion = v)
+    assert(upToV.columns.toSeq == cols)
+    assert(digest(upToV, "lang") == rows)
+    // the interval still folds onto snapshotAt(from) to give snapshotAt(v)
+    val folded = graft.lake.MergeUpsert.latestPerKey(
+      source.readAt(spark, from).unionByName(upToV),
+      Seq("updated_seq", "commit"), source.keyCols)
+      .filter(!col("__deleted")).drop("__deleted")
+    assert(digest(folded, "lang") == digest(source.snapshotAt(spark, v), "lang"))
+  }
+
   test("mirror consumes the feed incrementally across commits, a rename " +
       "and a compaction; a crashed cursor re-delivers and no-ops " +
       "(exactly-once composition)") {

@@ -105,6 +105,51 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortAggregate"), p)
   }
 
+  test("bucketed merge-on-read: lookupKeys, a read with deltas and " +
+      "compaction collapse latest-wins with no Exchange") {
+    import graft.engine.Replayer
+    import graft.lake.{LakeTable, Maintenance}
+    val source = new LakeTable(tmpDir("plan-bucketed"), 8)
+    val events = graft.gen.ChangeGen.stream(spark,
+      graft.gen.GenConfig(numEvents = 400, epochSize = 200)).toDF()
+    Replayer.run(spark, events, source, maxEpoch = 1)
+    assert(source.currentManifest.get.deltaFiles.nonEmpty,
+      "collapse must be active for this test")
+    def executed(df: DataFrame): String = {
+      df.collect()
+      df.queryExecution.executedPlan.toString
+    }
+    val keys = source.snapshot(spark).select("repo", "path").head(4)
+      .map(r => Seq[Any](r.getString(0), r.getString(1))).toSeq
+    Seq("lookupKeys" -> source.lookupKeys(spark, keys),
+        "read" -> source.read(spark)).foreach { case (what, df) =>
+      val p = executed(df)
+      assert(p.contains("Bucketed: true"), s"$what:\n$p")
+      assert(p.contains("latest_by"), s"$what:\n$p")
+      assert(!p.contains("Exchange"), s"$what must not shuffle:\n$p")
+    }
+    // the compaction's write, as Spark executed it
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      assert(Maintenance.compact(spark, source).isDefined)
+      val deadline = System.nanoTime() + 30000000000L
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val p = plans.peek()
+    assert(p != null && p.contains("InsertIntoHadoopFsRelationCommand"), p)
+    assert(p.contains("Bucketed: true"), p)
+    assert(!p.contains("Exchange"), "compaction must not shuffle:\n" + p)
+  }
+
   test("ann lsh rerank dedupes on ids only — vectors never reach an exchange") {
     val p = plan("ann_lsh_bucketed")
     // the only exchanges: pair-dedupe hash agg on (query_id, cand_id) and
