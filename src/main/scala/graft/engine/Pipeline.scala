@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.lake.{LakeTable, Maintenance, MergeUpsert}
+import graft.lake.{LakeTable, Maintenance, Manifest, MergeUpsert}
 import graft.transform.Domains
 
 /** Dependency-ordered multi-table incremental pipeline: the engine analogue
@@ -25,22 +25,23 @@ import graft.transform.Domains
   * tombstones for groups that vanished (e.g. a repo whose last path was
   * deleted). Per-epoch domain work is therefore O(rows of affected
   * groups), never O(table):
-  *  - the affected-group set is distinct-projected from the epoch batch
-  *    and semi-joined against both the source snapshot and the domain
-  *    table (no full-table recomputation). The restriction is
-  *    '''size-gated''': a normal epoch's group set is broadcast-small and
-  *    plans as broadcast semi-joins (plus a LocalRelation fast path with
-  *    bucket pruning when the group key IS the merge key); but the set is
-  *    O(distinct group keys in the batch), and a full-refresh epoch — or
-  *    the catch-up union of many missed epochs — can touch millions of
-  *    groups, where a driver collect / forced broadcast becomes the
-  *    bottleneck before any executor does. Above
-  *    [[Pipeline.broadcastGroupLimit]] the set stays fully distributed
-  *    and both restrictions plan as shuffle semi-joins (PlanSpec asserts
-  *    BOTH regimes). The gate costs no Spark job: the bound is the sum of
-  *    per-epoch `keys=` counts from the source manifest's lineage
-  *    registry (groups are functions of the merge key, so distinct
-  *    groups ≤ distinct keys);
+  *  - the change keys are those of the delta files the source committed
+  *    since the version the domain consumed last ([[Pipeline.touchedKeys]]
+  *    — the lake records them, so no domain reads the event feed); the
+  *    affected-group set is distinct-projected from those keys and
+  *    semi-joined against both the source snapshot and the domain table
+  *    (no full-table recomputation). The restriction is
+  *    '''size-gated''': a normal epoch's key set is broadcast-small, is
+  *    collected once per epoch into a LocalRelation shared by every
+  *    domain, and plans as broadcast semi-joins (with bucket pruning when
+  *    the group key IS the merge key); but a full-refresh epoch — or a
+  *    deep catch-up — can touch millions of keys, where a driver collect
+  *    / forced broadcast becomes the bottleneck before any executor does.
+  *    Above [[Pipeline.broadcastGroupLimit]] the set stays fully
+  *    distributed and both restrictions plan as shuffle semi-joins
+  *    (PlanSpec asserts BOTH regimes). The gate costs no Spark job: the
+  *    bound is the sum of per-epoch `keys=` counts from the source
+  *    manifest's lineage registry;
   *  - group aggregates are partial+final hash aggregates over only the
   *    semi-filtered rows;
   *  - tombstone detection is `affected domain keys EXCEPT recomputed
@@ -55,15 +56,15 @@ import graft.transform.Domains
   * watermark. A crash mid-pipeline (source committed epoch e, person
   * committed e, visit still at e-1) resumes at the MINIMUM watermark + 1;
   * already-committed (table, epoch) pairs skip through the exactly-once
-  * merge, and a domain that fell several epochs behind catches up in one
-  * merge whose affected-group set unions all missed epochs' batches.
+  * merge, and a domain that fell several epochs behind catches up from
+  * the source's delta commits of every epoch it missed.
   */
 object Pipeline {
 
-  /** Affected-group sets at or below this many group keys are collected /
-    * broadcast (LocalRelation fast path + bucket pruning + broadcast
+  /** Touched-key sets ([[touchedKeys]]) of at most this many source keys
+    * are collected / broadcast (LocalRelation + bucket pruning + broadcast
     * semi-joins); above it they stay distributed and the restrictions
-    * plan as shuffle semi-joins. 1 M short group keys is O(tens of MB)
+    * plan as shuffle semi-joins. 1 M short keys is O(tens of MB)
     * broadcast — past that the driver materialization is the scale
     * bottleneck. Overridable for tests and tuning via
     * `-Dgraft.pipeline.broadcastGroupLimit=N`. */
@@ -76,18 +77,18 @@ object Pipeline {
     * @param name       domain/table name
     * @param keyCols    the domain table's merge key
     * @param groupExprs recomputation-group key: name → expression over
-    *                   CHANGE-EVENT/source rows; the names must also be
-    *                   columns of the transform's output (they locate
-    *                   existing rows of affected groups for tombstoning).
-    *                   For RECOMPUTE-maintained domains these must be
-    *                   FUNCTIONS OF THE SOURCE MERGE KEY — a key whose
-    *                   group changed between epochs would otherwise leave
-    *                   its OLD group stale (the batch only names the new
-    *                   one). ALGEBRAIC domains are exempt: the delta fold
-    *                   reads a key's old group from the pre-state
-    *                   snapshot, so group moves decrement/increment
-    *                   exactly. Either way the size gate's bound holds —
-    *                   groups touched ≤ 2 × distinct keys per epoch
+    *                   source rows; the names must also be columns of the
+    *                   transform's output (they locate existing rows of
+    *                   affected groups for tombstoning). RECOMPUTE-
+    *                   maintained domains evaluate them over the touched
+    *                   source KEYS alone, so they can only be FUNCTIONS OF
+    *                   THE SOURCE MERGE KEY (a key whose group could
+    *                   change would leave its OLD group stale): any other
+    *                   column fails analysis at the domain's first
+    *                   incremental epoch, naming the domain. ALGEBRAIC
+    *                   domains are exempt: the delta fold reads a key's
+    *                   old group from the pre-state snapshot, so group
+    *                   moves decrement/increment exactly
     * @param transform  (session, source rows restricted to affected
     *                   groups, upstream domain snapshots by name) → the
     *                   current domain rows for those groups
@@ -498,17 +499,12 @@ object Pipeline {
     val stop = upToEpoch.map(u => math.min(u, maxEpoch)).getOrElse(maxEpoch)
     val all = source +: domains.map(d => tables(d.name))
     val start = all.map(_.lastCommittedEpoch).min + 1
-    // the source batch and the recompute domains' affected events; this
-    // feed covers epochs <= maxEpoch only. The bounds stay literals so
-    // the filter pushes down to Parquet row groups (algebraic domains
-    // take their touched keys from the source's delta commits instead)
-    val eventsBetween = (lo: Long, hi: Long) =>
-      if (hi <= maxEpoch)
-        Some(events.filter(col("epoch") > lo && col("epoch") <= hi))
-      else None
     var compactions = 0
     val updates = (start to stop).flatMap { e =>
-      val ups = epochStep(spark, source, domains, tables, e, eventsBetween)
+      // the epoch is a literal so the filter pushes down to Parquet row
+      // groups; domains take their touched keys from the source's commits
+      val ups = epochStep(spark, source, domains, tables, e,
+        events.filter(col("epoch") === e))
       if (compactEvery > 0 && (e - start + 1) % compactEvery == 0 &&
           e < stop && foldHotBuckets(spark, all, compactEvery))
         compactions += 1
@@ -542,31 +538,34 @@ object Pipeline {
           "declare upstream domains first (dependency order)")
       seen + d.name
     }
-    domains.foreach { d =>
-      tables(d.name).currentManifest.foreach { m =>
-        require(m.keyCols == d.keyCols,
-          s"domain ${d.name}: existing table at ${tables(d.name).root} is " +
-            s"keyed on (${m.keyCols.mkString(", ")}) but the DomainDef " +
-            s"declares (${d.keyCols.mkString(", ")}) — a key change needs " +
-            "a backfill into a fresh root, not an in-place rerun")
-      }
-    }
+    domains.foreach(d => requireSameKey(d, tables(d.name)))
   }
+
+  /** A table's committed keyCols win over the DomainDef's, so a re-keyed
+    * def run (or rebuilt) against an existing root is refused. */
+  private def requireSameKey(d: DomainDef, t: LakeTable): Unit =
+    t.currentManifest.foreach { m =>
+      require(m.keyCols == d.keyCols,
+        s"domain ${d.name}: existing table at ${t.root} is keyed on " +
+          s"(${m.keyCols.mkString(", ")}) but the DomainDef declares " +
+          s"(${d.keyCols.mkString(", ")}) — a key change needs a rebuild " +
+          "into a fresh root, not an in-place rerun")
+    }
 
   /** THE per-epoch step, shared by every driver ([[run]], hence
     * [[Replayer.run]], and both [[graft.streaming.StreamIngest]] queries):
-    * merge epoch `e` into the source, then update every domain that lags
-    * `e`, in dependency order.
+    * merge `batch`, the events of epoch `e`, into the source, then update
+    * every domain that lags `e`, in dependency order.
     *
-    * `eventsBetween(lo, hi)` yields the events of epochs (lo, hi], or None
-    * when the caller cannot produce them. The batch driver holds its whole
-    * feed up to maxEpoch; the streaming form holds only the batch at hand,
-    * (e-1, e] — Structured Streaming re-executes a failed batchId with
-    * identical content, so a streamed domain is never more than one epoch
-    * behind. The one function gives the source batch and each lagging
-    * recompute domain's affected events (a catch-up unions every missed
-    * epoch into one recomputation). A domain whose missed epochs are
-    * unavailable (attached mid-stream) is refused.
+    * No domain reads `batch`. Each takes the keys it must revisit from the
+    * source's own delta commits since the source version it consumed last
+    * ([[touchedKeys]]), so a domain that lags by several epochs, or is
+    * attached mid-stream, catches up from the lake whatever the driver
+    * holds. The source versions are pinned once per epoch, after the
+    * merge: algebraic domains fold up to the head, recompute domains
+    * consume up to the latest version at watermark `e` (so each step
+    * revisits exactly the keys of the epochs it commits). Domains that
+    * consume the same interval share one key collect.
     *
     * The post-merge source snapshot is materialized at most once per
     * epoch, and only when a recompute domain updates: every such domain
@@ -583,12 +582,19 @@ object Pipeline {
     * grouping columns still pushes below it and on below the collapse. */
   private[graft] def epochStep(spark: SparkSession, source: LakeTable,
       domains: Seq[DomainDef], tables: Map[String, LakeTable], e: Long,
-      eventsBetween: (Long, Long) => Option[DataFrame]): Seq[TableUpdate] = {
-    val batch = eventsBetween(e - 1, e).getOrElse(
-      throw new IllegalArgumentException(s"no events for epoch $e"))
+      batch: DataFrame): Seq[TableUpdate] = {
     // mergeEpoch commits (retrying lost CAS races internally), returns
     // None for an already-committed epoch, or throws
     val srcRes = MergeUpsert.mergeEpoch(spark, source, batch, e)
+    // pinned on first use: a step with no lagging domain reads nothing
+    lazy val headV = source.currentVersion
+    lazy val epochV =
+      if (source.readManifest(headV).epochWatermark == e) headV
+      else source.versionAtEpoch(e).getOrElse(headV)
+    val touched = scala.collection.mutable.Map.empty[(Long, Long), TouchedKeys]
+    def keysOf(preV: Long, postV: Long): TouchedKeys =
+      touched.getOrElseUpdate((preV, postV),
+        touchedKeys(spark, source, preV, postV))
     var snap: Option[DataFrame] = None
     def sourceSnap: DataFrame = snap.getOrElse {
       val s = source.snapshot(spark)
@@ -600,10 +606,12 @@ object Pipeline {
     val updates =
       try TableUpdate("source", e, srcRes) +: domains.map { d =>
         val dTable = tables(d.name)
+        val dm = dTable.currentManifest // the one read of the domain's head
         TableUpdate(d.name, e,
-          if (dTable.lastCommittedEpoch >= e) None
-          else updateDomain(spark, d, dTable, source, sourceSnap,
-            upstreamSnap, eventsBetween, e))
+          if (dm.exists(_.epochWatermark >= e)) None
+          else updateDomain(spark, d, dTable, dm, source,
+            if (d.algebraic.isDefined) headV else epochV, keysOf,
+            sourceSnap, upstreamSnap, e))
       } finally snap.foreach(_.unpersist(blocking = false))
     // an uncommitted merge must fail the epoch: a streaming checkpoint
     // advancing past it would lose its events for good
@@ -613,17 +621,16 @@ object Pipeline {
     updates
   }
 
-  /** Upper bound on the distinct group keys touched in epochs
+  /** Upper bound on the distinct source keys touched in epochs
     * `(fromExclusive, to]` — read from the source manifest's per-epoch
     * lineage (`keys=N` = distinct merge keys after within-batch
-    * compaction), costing no Spark job. Groups are functions of the merge
-    * key (the DomainDef contract), so distinct groups ≤ Σ per-epoch keys.
-    * Any epoch missing from the registry (truncated below the lineage
-    * floor, or never committed) returns `Long.MaxValue` — unknown means
-    * the scale-safe distributed regime, never a blind broadcast. A
-    * PRESENT entry that fails to parse throws (format drift is loud,
-    * never a silent all-distributed slowdown —
-    * [[graft.lake.EpochLineage]] is the single format/parse pair). */
+    * compaction), costing no Spark job. Any epoch missing from the
+    * registry (truncated below the lineage floor, or never committed)
+    * returns `Long.MaxValue` — unknown means the scale-safe distributed
+    * regime, never a blind broadcast. A PRESENT entry that fails to parse
+    * throws (format drift is loud, never a silent all-distributed
+    * slowdown — [[graft.lake.EpochLineage]] is the single format/parse
+    * pair). */
   private[graft] def affectedKeyBound(source: LakeTable,
       fromExclusive: Long, to: Long): Long =
     source.currentManifest match {
@@ -641,55 +648,99 @@ object Pipeline {
         sum
     }
 
-  /** One domain's epoch update, refused when the events it missed are
-    * unavailable, then routed by maintenance strategy:
-    *  - algebraic domains fold contribution deltas ([[algebraicBatchPlan]];
-    *    a fresh domain, or one whose pinned pre-state is unavailable,
-    *    takes a FULL recompute-with-tombstones over a version-pinned
-    *    snapshot — the affected-GROUP restriction of the generic path is
-    *    not sound for them, since their group keys may move);
-    *  - everything else recomputes affected groups ([[domainBatchPlan]])
-    *    over the post-merge source snapshot `snap` (evaluated only on this
-    *    path), tombstones vanished groups, and merges as epoch `e`. */
+  /** The source keys whose state may differ between versions `preV` and
+    * `postV`, with the source buckets they hash to and the size-gate
+    * decision — the one key source of every domain update.
+    *
+    * The keys are those of the delta files the source added in between
+    * ([[LakeTable.addedDeltaFiles]]), even where compaction has since
+    * folded them into base: every epoch commit writes one delta row per
+    * batch key, tombstones included. A concurrent run may have pinned a
+    * LATER pre version than this post; the keys that differ are those
+    * committed between the two, either way. The buckets come from the
+    * manifests (no Spark job). `small` bounds the keys by the per-epoch
+    * `keys=` counts of the source lineage ([[affectedKeyBound]]): at or
+    * below [[broadcastGroupLimit]] the keys are collected once into a
+    * LocalRelation that every consumer broadcasts; above it they stay a
+    * distributed scan of the delta files and nothing goes through the
+    * driver. */
+  private[graft] final case class TouchedKeys(preV: Long, postV: Long,
+      keys: DataFrame, buckets: Option[Set[Int]], small: Boolean)
+
+  private[graft] def touchedKeys(spark: SparkSession, source: LakeTable,
+      preV: Long, postV: Long): TouchedKeys = {
+    val (lo, hi) = (math.min(preV, postV), math.max(preV, postV))
+    val commits = source.addedDeltaFiles(lo, hi)
+    val hiM = commits.lastOption.fold(source.readManifest(hi))(_._1)
+    val files = commits.flatMap(_._2)
+    val keySchema = StructType(hiM.keyCols.map(hiM.schema(_)))
+    val scan = spark.read.schema(keySchema).parquet(files.map(_.path): _*)
+    val small = affectedKeyBound(source,
+      source.readManifest(lo).epochWatermark, hiM.epochWatermark) <=
+      broadcastGroupLimit
+    val keys =
+      if (!small) scan
+      else {
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(scan.collect().distinct.toList.asJava, keySchema)
+      }
+    TouchedKeys(preV, postV, keys,
+      Some(files.map(_.bucket).toSet).filter(_.size < hiM.numBuckets), small)
+  }
+
+  /** One domain's epoch update, consuming source changes up to `postV`.
+    * The version it consumed last (`preV`) is its own `srcv_v<L>` lineage
+    * entry, or — for a table committed before every domain recorded one —
+    * the source's version at the domain's watermark L. The keys touched
+    * in between come from `keysOf` ([[touchedKeys]]), and the update is
+    * routed by maintenance strategy:
+    *  - algebraic domains fold contribution deltas ([[algebraicBatchPlan]]);
+    *  - everything else recomputes the affected groups
+    *    ([[domainBatchPlan]]) over the post-merge source snapshot `snap`
+    *    (evaluated only on this path) and tombstones vanished groups.
+    * A fresh domain, or one whose `preV` was vacuumed, takes a FULL
+    * recompute-with-tombstones ([[fullDomainBatch]]); an algebraic one
+    * reads the snapshot pinned at `postV`, since the group restriction is
+    * not sound for it (its group keys may move). Every commit records
+    * `srcv_v<e> = postV`, the source changes consumed through epoch `e`. */
   private def updateDomain(spark: SparkSession, d: DomainDef,
-                           dTable: LakeTable, source: LakeTable,
-                           snap: => DataFrame,
-                           upstreamSnap: String => DataFrame,
-                           eventsBetween: (Long, Long) => Option[DataFrame],
-                           e: Long): Option[MergeUpsert.MergeResult] = {
-    val lag = dTable.lastCommittedEpoch
-    val affectedEvents = eventsBetween(lag, e).getOrElse(
-      throw new IllegalArgumentException(
-        s"domain ${d.name} is at epoch $lag, more than one behind batch " +
-          s"$e — catch it up with the batch Pipeline.run before streaming"))
-    val (batch, extraLineage) = d.algebraic match {
-      case Some(_) =>
-        val postV = source.currentVersion
-        (algebraicBatchPlan(spark, d, dTable, source, postV, e).getOrElse(
-          fullDomainBatch(spark, d, dTable, source.snapshotAt(spark, postV),
-            upstreamSnap, e)), Map(s"srcv_v$e" -> postV.toString))
-      case None => (domainBatchPlan(spark, d, dTable, snap, upstreamSnap,
-        affectedEvents, e, affectedKeyBound(source, lag, e)),
-        Map.empty[String, String])
-    }
-    try MergeUpsert.mergeEpoch(spark, dTable, batch, e, extraLineage)
-    catch {
+      dTable: LakeTable, dm: Option[Manifest], source: LakeTable,
+      postV: Long, keysOf: (Long, Long) => TouchedKeys, snap: => DataFrame,
+      upstreamSnap: String => DataFrame,
+      e: Long): Option[MergeUpsert.MergeResult] =
+    try {
+      val preV = dm.flatMap(m => m.lineage.get(s"srcv_v${m.epochWatermark}")
+          .flatMap(_.toLongOption)
+          .orElse(source.versionAtEpoch(m.epochWatermark)))
+        .filter(source.hasVersion)
+      val batch = preV.flatMap { pre =>
+        val t = keysOf(pre, postV)
+        if (d.algebraic.isDefined)
+          algebraicBatchPlan(spark, d, dTable, dm, source, t, e)
+        else Some(domainBatchPlan(spark, d, dTable, dm, snap, upstreamSnap,
+          t, e))
+      }.getOrElse(fullDomainBatch(spark, d, dTable, dm,
+        if (d.algebraic.isDefined) source.snapshotAt(spark, postV) else snap,
+        upstreamSnap, e))
+      MergeUpsert.mergeEpoch(spark, dTable, batch, e,
+        Map(s"srcv_v$e" -> postV.toString))
+    } catch {
       case scala.util.control.NonFatal(ex) => throw new RuntimeException(
         s"domain ${d.name} failed at epoch $e: ${ex.getMessage}", ex)
     }
-  }
 
   /** Full recompute-with-tombstones of one domain from a source snapshot,
     * committed at epoch `e`: the TRUNCATE-reload shape shared by
-    * [[rebuildDomain]] and the algebraic fallback path. O(table) by
-    * design. */
+    * [[rebuildDomain]] and the fresh/vacuumed path of [[updateDomain]].
+    * O(table) by design. */
   private def fullDomainBatch(spark: SparkSession, d: DomainDef,
-                              dTable: LakeTable, snap: DataFrame,
+                              dTable: LakeTable, dm: Option[Manifest],
+                              snap: DataFrame,
                               upstreamSnap: String => DataFrame,
                               e: Long): DataFrame = {
     val upstream = d.dependsOn.map(n => n -> upstreamSnap(n)).toMap
     val fresh = reserveSeqName(d.transform(spark, snap, upstream))
-    val existing = dTable.snapshot(spark)
+    val existing = dTable.snapshotOf(spark, dm)
     val dels =
       if (existing.columns.isEmpty) fresh.select(d.keyCols.map(col): _*).limit(0)
       else existing.select(d.keyCols.map(col): _*)
@@ -717,17 +768,15 @@ object Pipeline {
       .reduce(_ && _), "left_semi")
   }
 
-  /** The DELTA-FOLD batch for an algebraic domain at epoch `e`, or None if
-    * the fold does not apply — the caller then takes the (version-pinned)
-    * full-recompute path. That happens for a fresh domain (pre = ∅, so
-    * the full rollup of `postV` IS the fold), when the pre-state manifest
-    * was vacuumed, or when the source schema changed inside the interval.
+  /** The DELTA-FOLD batch for an algebraic domain at epoch `e`, or None
+    * when the source schema changed inside the interval — the caller then
+    * takes the (version-pinned) full-recompute path.
     *
     * VERSION PINNING — the fold's exactness invariant. Every input is read
-    * from pinned manifest versions, never "current state" or the event
-    * feed: post = `readAt(postV)` (the version the caller sampled), pre =
-    * `readAt(the version recorded when the domain committed its own
-    * watermark epoch)`. Every algebraic commit records its post version
+    * from pinned manifest versions, never "current state" or an event
+    * feed: post = `readAt(t.postV)` (the version the step pinned), pre =
+    * `readAt(t.preV)` (the version recorded when the domain committed its
+    * own watermark epoch). Every domain commit records its post version
     * in the domain's lineage (`srcv_v<e>`), so the invariant
     * "domain@L == rollup(source@srcv_v L)" survives the two cases where
     * `versionAtEpoch(L)` would lie:
@@ -739,16 +788,10 @@ object Pipeline {
     *    duplicate-pipeline scenario, or a writer with a longer feed): the
     *    pinned post version makes the recorded state self-describing
     *    regardless of interleaving.
-    * `versionAtEpoch(L)` remains the fallback pre-resolution for tables
-    * whose epoch L predates lineage recording.
     *
     * Shape (and why it is O(batch) even for a global rollup):
-    *  1. the touched keys are the keys of the delta files the source added
-    *     between the two pinned versions ([[LakeTable.addedDeltaFiles]]),
-    *     even where compaction has since folded them into base; their
-    *     BUCKET set comes from the manifests (no Spark job) and prunes
-    *     both source scans. Below the size gate the keys are collected
-    *     once into a LocalRelation both semi-joins broadcast;
+    *  1. the touched keys and their bucket set are `t` ([[touchedKeys]]);
+    *     the buckets prune both source scans;
     *  2. each touched key's live row contributes `(+1 count, +sums)`
     *     under post and negated under pre; one partial+final hash
     *     aggregate per group key yields the per-group delta. A key whose
@@ -762,48 +805,20 @@ object Pipeline {
     * shuffle exchange, which adaptive execution reuses, so it is not
     * cached. */
   private[graft] def algebraicBatchPlan(spark: SparkSession, d: DomainDef,
-      dTable: LakeTable, source: LakeTable, postV: Long,
-      e: Long): Option[DataFrame] = {
+      dTable: LakeTable, dm: Option[Manifest], source: LakeTable,
+      t: TouchedKeys, e: Long): Option[DataFrame] = {
     val spec = d.algebraic.get
     val groupNames = d.groupExprs.map(_._1)
     val contribs: Seq[(String, Column)] = spec.contribs
     val measureNames = contribs.map(_._1)
-
-    val L = dTable.lastCommittedEpoch
-    if (L < 0) return None
-    val preV = dTable.currentManifest
-      .flatMap(_.lineage.get(s"srcv_v$L")).flatMap(_.toLongOption)
-      .orElse(source.versionAtEpoch(L))
-      .filter(source.hasVersion)
-      .getOrElse(return None) // vacuumed/unknown → full recompute
-
-    val postM = source.readManifest(postV)
-    val srcKeys = postM.keyCols
-    // a concurrent run may have pinned a LATER pre version than our post:
-    // the keys that differ are those committed between the two, either way
-    val files = source.addedDeltaFiles(math.min(preV, postV),
-      math.max(preV, postV)).flatMap(_._2)
-    val small = affectedKeyBound(source, L, postM.epochWatermark) <=
-      broadcastGroupLimit
-    val keySchema = StructType(srcKeys.map(postM.schema(_)))
-    val keyScan = spark.read.schema(keySchema).parquet(files.map(_.path): _*)
-    val keys =
-      if (!small) keyScan
-      else {
-        import scala.jdk.CollectionConverters._
-        spark.createDataFrame(keyScan.collect().distinct.toList.asJava,
-          keySchema)
-      }
-    val buckets = Some(files.map(_.bucket).toSet)
-      .filter(_.size < postM.numBuckets)
     def contributions(df: DataFrame, sign: Long): DataFrame =
-      nullSafeSemi(df, keys, srcKeys, small)
+      nullSafeSemi(df, t.keys, t.keys.columns.toSeq, t.small)
         .withColumns(d.groupExprs.toMap)
         .select(groupNames.map(col) ++ contribs.map { case (n, c) =>
           (c * lit(sign)).as(n) }: _*)
 
-    val postSnap = source.snapshotAt(spark, postV, buckets)
-    val preSnap = source.snapshotAt(spark, preV, buckets)
+    val postSnap = source.snapshotAt(spark, t.postV, t.buckets)
+    val preSnap = source.snapshotAt(spark, t.preV, t.buckets)
     // schema drift inside the interval (rename/evolution between the
     // domain's watermark and now) → conservative full recompute
     if (preSnap.columns.toSet != postSnap.columns.toSet) return None
@@ -814,12 +829,12 @@ object Pipeline {
         measureNames.tail.map(n => sum(col(n)).as(n)): _*)
       .filter(measureNames.map(n => col(n) =!= 0L).reduce(_ || _))
     val deltaKeys = delta.select(groupNames.map(col): _*)
-    val existing0 = dTable.snapshot(spark)
+    val existing0 = dTable.snapshotOf(spark, dm)
     val tagged = delta.withColumn("__existed", lit(0))
     val folded0 =
       if (existing0.columns.isEmpty) tagged
       else tagged.unionByName(
-        nullSafeSemi(existing0, deltaKeys, groupNames, small)
+        nullSafeSemi(existing0, deltaKeys, groupNames, t.small)
         .select(groupNames.map(col) ++ measureNames.map(col): _*)
         .withColumn("__existed", lit(1)))
     val folded = folded0.groupBy(groupNames.map(col): _*)
@@ -833,50 +848,40 @@ object Pipeline {
     Some(withMergeOrdering(fresh, dels, e))
   }
 
-  /** The (lazy) domain-update batch for epoch `e` — exposed separately
-    * from the merge so its physical plan is assertable in PlanSpec.
-    * `affectedBound` ≤ [[broadcastGroupLimit]] (a normal epoch): both
-    * restrictions are broadcast semi-joins on the affected-group set,
-    * never a shuffle of the source or domain table. Above the limit (a
-    * full-refresh-scale epoch or a deep catch-up): the group set is never
-    * driver-collected and both restrictions plan as shuffle semi-joins —
-    * O(batch + affected rows) exchanged, nothing forced through the
-    * driver. */
+  /** The (lazy) recompute batch for epoch `e` — exposed separately from
+    * the merge so its physical plan is assertable in PlanSpec. The
+    * affected groups are `groupExprs` projected from the touched source
+    * KEYS alone, so a group expression over any other column fails
+    * analysis here instead of leaving a moved key's old group stale.
+    * Below the size gate (`t.small`, a normal epoch) the keys are already
+    * local: the group set projects on the driver without a Spark job, both
+    * restrictions are broadcast semi-joins, and when the group key IS the
+    * domain's merge key the tombstone probe scans only the buckets those
+    * groups hash to. Above it (a full-refresh-scale epoch or a deep
+    * catch-up) the group set is never driver-collected and both
+    * restrictions plan as shuffle semi-joins — O(batch + affected rows)
+    * exchanged, nothing forced through the driver. */
   private[graft] def domainBatchPlan(spark: SparkSession, d: DomainDef,
-                           dTable: LakeTable, snap: DataFrame,
-                           upstreamSnap: String => DataFrame,
-                           affectedEvents: DataFrame,
-                           e: Long,
-                           affectedBound: Long): DataFrame = {
+      dTable: LakeTable, dm: Option[Manifest], snap: DataFrame,
+      upstreamSnap: String => DataFrame, t: TouchedKeys,
+      e: Long): DataFrame = {
     val groupNames = d.groupExprs.map(_._1)
-    val aff0 = affectedEvents
-      .select(d.groupExprs.map { case (n, ex) => ex.as(n) }: _*).distinct()
-    val small = affectedBound <= broadcastGroupLimit
-
-    // When the set is gate-small AND the group key IS the table's merge
-    // key (person, condition, drug), collect it ONCE — both semi-joins
-    // broadcast it anyway — so the bucket-ID derivation and both joins
-    // work from a LocalRelation instead of re-scanning the epoch batch
-    // per consumer, and the tombstone probe can scan only the buckets
-    // those keys hash to.
+    val groups = t.keys.select(d.groupExprs.map { case (n, ex) => ex.as(n) }: _*)
     val (aff, prunedBuckets): (DataFrame, Option[Set[Int]]) =
-      if (small && groupNames == dTable.keyCols &&
-          dTable.currentManifest.isDefined) {
+      if (!t.small) (groups.distinct(), None)
+      else {
         import scala.jdk.CollectionConverters._
-        val rows = aff0.collect()
-        val local = spark.createDataFrame(rows.toList.asJava, aff0.schema)
-        val nb = dTable.numBuckets
-        // driver-side: the rows are already local, and the previous
-        // distinct+collect over the LocalRelation cost two Spark stages
-        // per domain-epoch for <= numBuckets integers
-        val bucketFn = MergeUpsert.localBucketOf(aff0.schema, groupNames, nb)
-        (local, Some(rows.iterator.map(bucketFn).toSet))
-      } else (aff0, None)
+        val rows = groups.collect().distinct // a LocalRelation projection
+        val bucketOf = dm.filter(_.keyCols == groupNames).map(m =>
+          MergeUpsert.localBucketOf(groups.schema, groupNames, m.numBuckets))
+        (spark.createDataFrame(rows.toList.asJava, groups.schema),
+          bucketOf.map(f => rows.iterator.map(f).toSet))
+      }
 
     // source rows of the affected groups only (semi-join over the
     // caller's per-epoch materialized snapshot)
     val snapRestricted = nullSafeSemi(
-        snap.withColumns(d.groupExprs.toMap), aff, groupNames, small)
+        snap.withColumns(d.groupExprs.toMap), aff, groupNames, t.small)
       .select(snap.columns.toIndexedSeq.map(col): _*)
 
     val upstream: Map[String, DataFrame] =
@@ -886,10 +891,10 @@ object Pipeline {
     // groups that vanished: previously-present domain keys of affected
     // groups with no recomputed row → delete tombstones; scanned with the
     // bucket pruning derived above where the group key is the merge key
-    val existing = dTable.snapshot(spark, prunedBuckets)
+    val existing = dTable.snapshotOf(spark, dm, prunedBuckets)
     val dels =
       if (existing.columns.isEmpty) fresh.select(d.keyCols.map(col): _*).limit(0)
-      else nullSafeSemi(existing, aff, groupNames, small)
+      else nullSafeSemi(existing, aff, groupNames, t.small)
         .select(d.keyCols.map(col): _*)
         .except(fresh.select(d.keyCols.map(col): _*))
     withMergeOrdering(fresh, dels, e)
@@ -958,20 +963,14 @@ object Pipeline {
         s"${dTable.lastCommittedEpoch} >= source watermark $e — a rebuild " +
         "commits AT the watermark and must go into a fresh (or lagging) " +
         "root")
-    dTable.currentManifest.foreach { m =>
-      require(m.keyCols == d.keyCols,
-        s"rebuildDomain(${d.name}): existing table at ${dTable.root} is " +
-          s"keyed on (${m.keyCols.mkString(", ")}) but the DomainDef " +
-          s"declares (${d.keyCols.mkString(", ")}) — rebuild a re-keyed " +
-          "domain into a fresh root")
-    }
-    // pin the snapshot version and (for algebraic domains) record it, so
-    // incremental delta folding resumes exactly from the rebuilt state
+    requireSameKey(d, dTable)
+    // pin the snapshot version and record it, so incremental maintenance
+    // resumes exactly from the rebuilt state
     val postV = source.currentVersion
     MergeUpsert.mergeEpoch(spark, dTable,
-      fullDomainBatch(spark, d, dTable, source.snapshotAt(spark, postV),
+      fullDomainBatch(spark, d, dTable, dTable.currentManifest,
+        source.snapshotAt(spark, postV),
         domainReader(spark, topology, tables), e), e,
-      if (d.algebraic.isDefined) Map(s"srcv_v$e" -> postV.toString)
-      else Map.empty)
+      Map(s"srcv_v$e" -> postV.toString))
   }
 }

@@ -452,7 +452,13 @@ class LakeTable(val root: String, defaultNumBuckets: Int,
     * exactly one bucket. */
   def snapshot(spark: SparkSession,
                buckets: Option[Set[Int]] = None): DataFrame =
-    live(read(spark, buckets))
+    snapshotOf(spark, currentManifest, buckets)
+
+  /** [[snapshot]] of a head the caller already read (None: an empty
+    * table), so one read of the manifest serves every use of it. */
+  def snapshotOf(spark: SparkSession, head: Option[Manifest],
+                 buckets: Option[Set[Int]] = None): DataFrame =
+    live(head.fold(spark.emptyDataFrame)(readFrom(spark, _, buckets)))
 
   /** Live snapshot as of manifest `version` ([[readAt]] time travel),
     * optionally bucket-pruned (same key-restricted-consumer safety rule as

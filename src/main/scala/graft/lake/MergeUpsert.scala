@@ -257,8 +257,9 @@ object MergeUpsert {
           "and its events would be silently lost (epochs must be " +
           "committed in ascending order per table)")
     }
-    val nb = table.numBuckets
-    val kc = table.keyCols
+    // table properties: the head's, or the constructor's for a fresh table
+    val nb = current.fold(table.numBuckets)(_.numBuckets)
+    val kc = current.fold(table.keyCols)(_.keyCols)
 
     // 1. normalize renamed feed columns to canonical names (manifest map)
     val aliases = current.map(_.feedAliases).getOrElse(Map.empty)

@@ -84,8 +84,9 @@ object StreamIngest {
     * registry skips its already-committed (table, epoch) pairs — the same
     * mid-pipeline resume the batch [[Pipeline.run]] gets from the
     * min-watermark restart, here provided by Structured Streaming's
-    * deterministic re-delivery. A domain more than one epoch behind the
-    * stream fails the batch: catch it up with [[Pipeline.run]] first.
+    * deterministic re-delivery. A domain that lags the stream, or is
+    * attached mid-stream, catches up from the source's own delta commits
+    * (a fresh one by a full recompute), so no domain needs the batch.
     * `compactEvery` folds hot buckets of ALL tables every k batches
     * (incremental, O(hot buckets)). */
   def startPipeline(spark: SparkSession, walDir: String, schema: StructType,
@@ -105,8 +106,7 @@ object StreamIngest {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val ups = Pipeline.epochStep(batch.sparkSession, source, domains,
-          tables, batchId, (lo, hi) =>
-            if (lo == batchId - 1 && hi == batchId) Some(batch) else None)
+          tables, batchId, batch)
         // the SOURCE skip (the step's first update) is the checkpoint-reset
         // hazard; domain skips are derived recomputations, keyed off the
         // same source watermark

@@ -45,6 +45,16 @@ class PipelineSpec extends SparkSpec {
       == DomainOracle.measurementLines(st), "measurement")
   }
 
+  private def assertPersonAndDrug(tables: Map[String, LakeTable],
+      st: Map[(String, String), FoldOracle.State]): Unit = {
+    assert(lines(tables("person").snapshot(spark), "person_source_value",
+      "n_paths", "n_langs", "langs", "first_path", "modified_seq")
+      == DomainOracle.personLines(st), "person")
+    assert(lines(tables("drug_exposure").snapshot(spark), "repo", "path",
+      "exposure_concept", "source_seq", "content_len")
+      == DomainOracle.drugLines(st), "drug_exposure")
+  }
+
   private def freshPipeline(): (LakeTable, Seq[Pipeline.DomainDef],
       Map[String, LakeTable]) = {
     val source = new LakeTable(tmpDir("pipe-src"), 8)
@@ -574,27 +584,31 @@ class PipelineSpec extends SparkSpec {
   test("algebraic catch-up whose pre-state manifest was VACUUMED falls " +
       "back to the full recompute and still oracle-matches") {
     val source = new LakeTable(tmpDir("alg-vac-src"), 4)
-    val cv = Pipeline.omopDomainsDeep(spark).find(_.name == "code_value").get
-    val tables = Pipeline.openDomainTables(tmpDir("alg-vac-dom"), Seq(cv), 2)
+    // recompute domains ride along: their pre-state is vacuumed too
+    val doms = Pipeline.omopDomainsDeep(spark).filter(d => Set("person",
+      "drug_exposure", "code_value")(d.name))
+    val tables = Pipeline.openDomainTables(tmpDir("alg-vac-dom"), doms, 2)
     val events = ChangeGen.stream(spark, cfg).toDF()
-    Pipeline.run(spark, events, source, Seq(cv), tables, maxEpoch = 5,
+    Pipeline.run(spark, events, source, doms, tables, maxEpoch = 5,
       upToEpoch = Some(1))
     // source runs ahead alone, then vacuum reclaims every manifest at the
     // domain's watermark — the time-travel pre-state is gone
     Replayer.run(spark, events, source, maxEpoch = 5)
     graft.lake.Maintenance.vacuum(source, retainVersions = 1, graceMillis = 0L)
     assert(source.versionAtEpoch(1L).isEmpty, "pre-state must be vacuumed")
-    Pipeline.run(spark, events, source, Seq(cv), tables, maxEpoch = 5)
+    Pipeline.run(spark, events, source, doms, tables, maxEpoch = 5)
     assert(lines(tables("code_value").snapshot(spark), "lang",
       "n_code_paths", "total_code_chars")
       == DomainOracle.codeValueLines(oracleState))
+    assertPersonAndDrug(tables, oracleState)
   }
 
   test("algebraic catch-up across source compactions reads the delta " +
       "files of every version in the interval, not only the head's") {
     val source = new LakeTable(tmpDir("alg-cmp-src"), 4)
-    val alg = Pipeline.omopDomainsDeep(spark)
-      .filter(d => d.name == "code_value" || d.name == "location")
+    // the recompute domains take their keys from the same delta commits
+    val alg = Pipeline.omopDomainsDeep(spark).filter(d => Set("person",
+      "drug_exposure", "code_value", "location")(d.name))
     val tables = Pipeline.openDomainTables(tmpDir("alg-cmp-dom"), alg, 2)
     val events = ChangeGen.stream(spark, cfg).toDF()
     Pipeline.run(spark, events, source, alg, tables, maxEpoch = 5,
@@ -615,6 +629,45 @@ class PipelineSpec extends SparkSpec {
     assert(lines(Pipeline.readDomain(spark, locDef, tables("location")),
       "location_dir", "n_location_repos", "n_location_paths")
       == DomainOracle.locationLines(oracleState), "location")
+    assertPersonAndDrug(tables, oracleState)
+  }
+
+  test("a recompute DomainDef grouping on a non-key column fails at " +
+      "analysis, naming the domain (groups project from key-only rows)") {
+    val source = new LakeTable(tmpDir("pipe-lang-src"), 4)
+    // `lang` is no function of the merge key: a path whose lang drifts
+    // would leave its old group stale, so the first incremental epoch
+    // must refuse the def
+    val byLang = Pipeline.DomainDef("lang_usage", Seq("lang"),
+      Seq("lang" -> col("lang")),
+      (_, src, _) => src.groupBy("lang").agg(count(lit(1)).as("n_paths")))
+    val tables = Pipeline.openDomainTables(tmpDir("pipe-lang-dom"),
+      Seq(byLang), 2)
+    val events = ChangeGen.stream(spark, cfg).toDF()
+    val ex = intercept[RuntimeException] {
+      Pipeline.run(spark, events, source, Seq(byLang), tables, maxEpoch = 1)
+    }
+    assert(ex.getMessage.contains("domain lang_usage failed at epoch 1"),
+      ex.getMessage)
+    assert(ex.getMessage.contains("`lang`"), ex.getMessage)
+    assert(tables("lang_usage").lastCommittedEpoch == 0)
+  }
+
+  test("rebuildDomain refuses a re-keyed DomainDef against an existing root") {
+    val (source, domains, tables) = freshPipeline()
+    val events = ChangeGen.stream(spark, cfg).toDF()
+    Pipeline.run(spark, events, source, domains, tables, maxEpoch = 1,
+      upToEpoch = Some(0))
+    // the source moves on alone, so person lags: a legal rebuild target
+    // but for its key
+    Replayer.run(spark, events, source, maxEpoch = 1)
+    val rekeyed = domains.find(_.name == "person").get
+      .copy(keyCols = Seq("person_source_value", "n_langs"))
+    val ex = intercept[IllegalArgumentException] {
+      Pipeline.rebuildDomain(spark, source, rekeyed, tables)
+    }
+    assert(ex.getMessage.contains("keyed on"), ex.getMessage)
+    assert(tables("person").lastCommittedEpoch == 0)
   }
 
   test("deleting a repo's last path tombstones its derived person row") {

@@ -161,6 +161,12 @@ class PlanSpec extends SparkSpec {
       "band join should broadcast the small query side:\n" + p)
   }
 
+  /** The keys a domain at epoch 0 consumes to reach the source's head at
+    * epoch 1, through the pipeline's own key source. */
+  private def epochOneKeys(source: graft.lake.LakeTable) =
+    graft.engine.Pipeline.touchedKeys(spark, source,
+      source.versionAtEpoch(0L).get, source.currentVersion)
+
   test("pipeline domain update restricts via BROADCAST semi-joins — the " +
       "source and domain tables are never shuffled to find affected groups") {
     import org.apache.spark.sql.functions._
@@ -173,11 +179,12 @@ class PlanSpec extends SparkSpec {
     val domains = Pipeline.omopDomains(spark)
     val tables = Pipeline.openDomainTables(tmpDir("plan-dom"), domains, 2)
     Pipeline.run(spark, events, source, domains, tables, maxEpoch = 0)
+    Replayer.run(spark, events, source, maxEpoch = 1)
     // epoch-1 update plan for condition (derived group key, non-key group)
     val d = domains.find(_.name == "condition_occurrence").get
     val batch = Pipeline.domainBatchPlan(spark, d, tables(d.name),
-      source.snapshot(spark), n => tables(n).snapshot(spark),
-      events.filter(col("epoch") === 1), 1L, affectedBound = 100L)
+      tables(d.name).currentManifest, source.snapshot(spark),
+      n => tables(n).snapshot(spark), epochOneKeys(source), 1L)
     val p = batch.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     assert("BroadcastHashJoin LeftSemi".r.findAllIn(p).size >= 2,
@@ -203,17 +210,20 @@ class PlanSpec extends SparkSpec {
     val domains = Pipeline.omopDomains(spark)
     val tables = Pipeline.openDomainTables(tmpDir("plan-big-dom"), domains, 2)
     Pipeline.run(spark, events, source, domains, tables, maxEpoch = 0)
+    Replayer.run(spark, events, source, maxEpoch = 1)
     // person: group key == merge key, so the SMALL regime would collect a
-    // LocalRelation + bucket-prune; the LARGE regime must do neither.
-    // Disable Spark's own size-estimate broadcasting so the assertion sees
-    // the gate's choice, not a stats-based rescue of tiny test data.
+    // LocalRelation + bucket-prune; the LARGE regime (gate closed at 0)
+    // must do neither. Disable Spark's own size-estimate broadcasting so
+    // the assertion sees the gate's choice, not a stats-based rescue of
+    // tiny test data.
     val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    System.setProperty("graft.pipeline.broadcastGroupLimit", "0")
     try {
       val person = domains.find(_.name == "person").get
       val batch = Pipeline.domainBatchPlan(spark, person, tables("person"),
-        source.snapshot(spark), n => tables(n).snapshot(spark),
-        events.filter(col("epoch") === 1), 1L, affectedBound = Long.MaxValue)
+        tables("person").currentManifest, source.snapshot(spark),
+        n => tables(n).snapshot(spark), epochOneKeys(source), 1L)
       val p = batch.queryExecution
         .explainString(ExplainMode.fromString("formatted"))
       assert(!p.contains("LocalTableScan"),
@@ -223,7 +233,10 @@ class PlanSpec extends SparkSpec {
       assert("LeftSemi".r.findAllIn(p).size >= 2,
         "both restrictions must still be semi-joins:\n" + p)
       assert(!p.contains("CartesianProduct"), p)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+      System.clearProperty("graft.pipeline.broadcastGroupLimit")
+    }
   }
 
   test("tombstone probe bucket-prunes the domain table when group key == merge key") {
@@ -243,13 +256,15 @@ class PlanSpec extends SparkSpec {
     val tables = Pipeline.openDomainTables(tmpDir("prune-dom"), domains, 8)
     val events = (e0 ++ e1).toDF()
     Pipeline.run(spark, events, source, domains, tables, maxEpoch = 0)
+    graft.lake.MergeUpsert.mergeEpoch(spark, source,
+      events.filter(col("epoch") === 1), 1L)
     val person = domains.find(_.name == "person").get
     val pTable = tables("person")
     val allPersonFiles = pTable.currentManifest.get.files.map(_.path).toSet
     assert(allPersonFiles.size >= 4, "need multiple buckets to prune across")
     val batch = Pipeline.domainBatchPlan(spark, person, pTable,
-      source.snapshot(spark), n => tables(n).snapshot(spark),
-      events.filter(col("epoch") === 1), 1L, affectedBound = 1L)
+      pTable.currentManifest, source.snapshot(spark),
+      n => tables(n).snapshot(spark), epochOneKeys(source), 1L)
     val readPersonFiles = batch.inputFiles.toSet
       .map((p: String) => new java.net.URI(p).getPath)
       .filter(allPersonFiles.contains)
@@ -338,10 +353,11 @@ class PlanSpec extends SparkSpec {
     val deep = Pipeline.omopDomainsDeep(spark)
     val tables = Pipeline.openDomainTables(tmpDir("plan-deep-dom"), deep, 2)
     Pipeline.run(spark, events, source, deep, tables, maxEpoch = 0)
+    Replayer.run(spark, events, source, maxEpoch = 1)
     val d = deep.find(_.name == "observation_final").get
     val batch = Pipeline.domainBatchPlan(spark, d, tables(d.name),
-      source.snapshot(spark), n => tables(n).snapshot(spark),
-      events.filter(col("epoch") === 1), 1L, affectedBound = 100L)
+      tables(d.name).currentManifest, source.snapshot(spark),
+      n => tables(n).snapshot(spark), epochOneKeys(source), 1L)
     val p = batch.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     // three semi-restrictions: source snapshot, upstream observation
@@ -384,8 +400,9 @@ class PlanSpec extends SparkSpec {
       events.filter(col("epoch") === 1), 1L)
     val srcFiles = source.currentManifest.get.files.map(_.path).toSet
     assert(srcFiles.size >= 4, "need multiple source buckets to prune across")
-    val batch = Pipeline.algebraicBatchPlan(spark, cv,
-      tables("code_value"), source, source.currentVersion, 1L).get
+    val batch = Pipeline.algebraicBatchPlan(spark, cv, tables("code_value"),
+      tables("code_value").currentManifest, source, epochOneKeys(source),
+      1L).get
     val readFiles = batch.inputFiles.toSet
       .map((p: String) => new java.net.URI(p).getPath)
     val readSrcFiles = readFiles.filter(srcFiles.contains)

@@ -134,30 +134,37 @@ class StreamIngestSpec extends SparkSpec {
       == DomainOracle.codeValueLines(st))
   }
 
-  test("the streaming pipeline refuses a domain more than one epoch behind " +
-      "the stream: its missed epochs are not in the batch at hand") {
+  test("a domain attached mid-stream catches up from the source's own " +
+      "delta commits and commits every later batch") {
     import graft.engine.Pipeline
+    import graft.oracle.DomainOracle
     val wal = tmpDir("lwal"); val ckpt = tmpDir("lckpt")
     val source = new LakeTable(tmpDir("llake"), 8)
     writeWal(wal, cfg, 0, 2000) // 4 files → one batch each
     StreamIngest.start(spark, wal, walSchema, source, ckpt,
       Trigger.AvailableNow(), maxFilesPerTrigger = Some(1)).awaitTermination()
-    assert(source.lastCommittedEpoch >= 1)
+    val attachedAt = source.lastCommittedEpoch + 1
+    assert(attachedAt >= 2)
     // a domain attached mid-stream: fresh (epoch -1), while the next batch
-    // is at least epoch 2
+    // is at least epoch 2 — none of the batches it missed is at hand
     val domains = Pipeline.omopDomains(spark).filter(_.name == "person")
     val tables = Pipeline.openDomainTables(tmpDir("ldom"), domains, 4)
     writeWal(wal, cfg, 2000, cfg.numEvents)
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamIngest.startPipeline(spark, wal, walSchema, source, domains,
-        tables, ckpt, maxFilesPerTrigger = Some(1)).awaitTermination()
-    }
-    def chain(t: Throwable): Seq[Throwable] =
-      if (t == null) Seq.empty else t +: chain(t.getCause)
-    assert(chain(ex).exists(c => Option(c.getMessage).exists(m =>
-      m.contains("domain person is at epoch -1, more than one behind") &&
-        m.contains("catch it up with the batch Pipeline.run"))), ex)
-    assert(tables("person").lastCommittedEpoch == -1)
+    StreamIngest.startPipeline(spark, wal, walSchema, source, domains,
+      tables, ckpt, maxFilesPerTrigger = Some(1)).awaitTermination()
+    val last = source.lastCommittedEpoch
+    assert(last > attachedAt, "several batches after the attach")
+    val person = tables("person").currentManifest.get
+    assert(person.epochWatermark == last)
+    (attachedAt to last).foreach(b =>
+      assert(person.lineage.contains(s"epoch_$b"), s"batch $b"))
+    val got = tables("person").snapshot(spark)
+      .select("person_source_value", "n_paths", "n_langs", "langs",
+        "first_path", "modified_seq").collect()
+      .map(r => (0 until r.length).map(i =>
+        Option(r.get(i)).map(_.toString).getOrElse("∅")).mkString("|"))
+      .toSeq.sorted
+    assert(got == DomainOracle.personLines(FoldOracle.expectedState(cfg)))
   }
 
   test("re-running a fully-drained stream with a fresh checkpoint is a harmless replay") {
