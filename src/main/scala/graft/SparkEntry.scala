@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.graftparquet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,8 +19,14 @@ import graft.functions.{Cleansing, TextAnalysis}
   */
 object SparkEntry {
 
-  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** A table of the suite's input directory. The schema is read from one
+    * parquet footer on the driver: without it every read would run a
+    * one-task Spark job to infer the same schema. */
+  private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    graftparquet.footerSchema(s, path)
+      .fold(s.read.parquet(path))(s.read.schema(_).parquet(path))
+  }
 
   /** Exact money aggregate: per-row round to cents, then integer sum. */
   private def cents(c: Column): Column = round(c * 100).cast("long")

@@ -34,11 +34,18 @@ object FastLocalFs {
     * scheduling per lake read at local[1]). Local listing is a stat()
     * each; 4096 keeps listing on the driver until file counts where a
     * distributed listing genuinely pays (object stores at many thousands
-    * of paths — on such a deployment this shim is not configured). */
+    * of paths — on such a deployment this shim is not configured).
+    *
+    * The code-generation cache is raised from Spark's default of 100
+    * classes to 4096: at 100 a pipeline epoch evicted and recompiled 60–85
+    * generated classes and a pass of ten suite queries 61, so the engine's
+    * steady work mostly fed Janino and the JIT fresh classes. It is a
+    * static conf, read when the session is built. */
   val sparkConf: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[FastLocalFs].getName,
     "spark.hadoop.fs.file.impl.disable.cache" -> "false",
-    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "4096"
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "4096",
+    "spark.sql.codegen.cache.maxEntries" -> "4096"
   ) ++ localScratch.map("spark.local.dir" -> _)
 
   /** RAM-backed shuffle/spill scratch for local runs, same policy as the

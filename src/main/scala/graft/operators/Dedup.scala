@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextAnalysis
 
@@ -9,10 +10,11 @@ import graft.functions.TextAnalysis
   * Scale notes (the design constraint, not an afterthought):
   *  - exact dedupe is a single hash-shuffle on the digest — the digest (8-64
   *    bytes) shuffles, never the document body;
-  *  - MinHash-LSH / SimHash banding turn the O(n²) pairwise problem into
-  *    equi-joins on band keys, so Spark plans ordinary shuffled hash joins;
-  *    oversized buckets (degenerate content, e.g. empty docs) are capped and
-  *    reported rather than silently exploding a join;
+  *  - MinHash-LSH / SimHash banding and the n-gram shingle join turn the
+  *    O(n²) pairwise problem into groups on band (or shingle) keys, paired
+  *    within each group over one hash exchange ([[cappedGroupPairs]]);
+  *    oversized groups (degenerate content, e.g. empty docs) are capped
+  *    rather than silently exploding the pair stream;
   *  - all hash functions are seed-parameterized xxhash64 — deterministic
   *    across runs/partitionings, codegen'd, no UDFs.
   */
@@ -81,7 +83,8 @@ object Dedup {
     * numHashes must be divisible by bands; rows-per-band r = numHashes/bands.
     * Buckets larger than `maxBucket` are dropped (degenerate keys) — the
     * standard web-dedup guard against quadratic blowup on empty/boilerplate
-    * docs; at 100 TB a single hot bucket would otherwise dominate the join. */
+    * docs; at 100 TB a single hot bucket would otherwise dominate the pair
+    * stream. */
   def minHashLsh(df: DataFrame, idCol: String, textCol: String,
                  k: Int = 3, numHashes: Int = 16, bands: Int = 4,
                  maxBucket: Int = 1000,
@@ -92,37 +95,44 @@ object Dedup {
     val sig = df.select(col(idCol).as("id"),
       minHashSignature(col(textCol), k, numHashes, baseHash).as("sig"))
 
-    // ONE exchange materializes the banded signatures; the bucket-count
-    // guard and both self-join sides then reuse it (ReusedExchange).
-    // Without the explicit repartition, Catalyst broadcast-joins the
-    // small sides and re-plans the whole scan+signature subtree into
-    // every consumer — the r06 before-plan scanned documents 4× and
-    // computed every signature 4×. Partitioning by the join key is also
-    // the only shape that exists at 100 TB (the corpus is never
-    // broadcastable); only (id, sig, band, bucket) ever shuffles.
     val banded = sig.select(col("id"), col("sig"),
       explode(array((0 until bands).map { b =>
         struct(lit(b).as("band"),
           bucketHash(concat_ws(",", (0 until r).map(i => col("sig")(b * r + i)): _*))
             .as("bucket"))
       }: _*)).as("bb"))
-      .select(col("id"), col("sig"), col("bb.band"), col("bb.bucket"))
-      .repartition(col("band"), col("bucket"))
-
-    // cap degenerate buckets before the self-join
-    val counts = banded.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-    val ok = banded.join(counts.filter(col("n") <= maxBucket).drop("n"),
-      Seq("band", "bucket"))
-
-    val a = ok.select(col("band"), col("bucket"), col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = ok.select(col("band"), col("bucket"), col("id").as("id_b"), col("sig").as("sig_b"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
+      .select(col("bb.band"), col("bb.bucket"), col("id"), col("sig"))
+    cappedGroupPairs(banded, Seq("band", "bucket"), maxBucket)
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        (size(filter(zip_with(col("a.sig"), col("b.sig"), (x, y) => x === y),
           (m: Column) => m)).cast("double") / lit(numHashes.toDouble))
           .as("est_jaccard"))
       .distinct()
+  }
+
+  /** Pairs of members of every group: one row per pair of rows of `rows`
+    * that share the `keys` columns, as structs `a` and `b` of the other
+    * columns (which hold an `id`), with `a.id < b.id`. A pair that shares
+    * several groups appears once per group.
+    *
+    * Groups with a NULL key, or with more than `cap` members, give no
+    * pairs: the hot-key guard, since a group of d members gives d² pairs.
+    * The plan has ONE exchange: the cap is a window count over the
+    * groups' hash partitioning, applied before members are gathered (a hot
+    * group is never held as one row), and the gather reuses that
+    * partitioning. Pairs come from exploding each group's member list
+    * twice, so no self-join plans a second scan of the input. */
+  private def cappedGroupPairs(rows: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
+    val k = keys.map(col)
+    val members = struct(rows.columns.toSeq.filterNot(keys.contains).map(col): _*)
+    rows.filter(k.map(_.isNotNull).reduce(_ && _))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(k: _*)))
+      .filter(col("n") <= cap)
+      .groupBy(k: _*).agg(collect_list(members).as("m"))
+      .filter(size(col("m")) > 1)
+      .select(explode(col("m")).as("a"), col("m"))
+      .select(col("a"), explode(col("m")).as("b"))
+      .filter(col("a.id") < col("b.id"))
   }
 
   /** SimHash: `nBits`-wide sign-of-weighted-bit-sums over word
@@ -151,32 +161,25 @@ object Dedup {
     val width = nBits / chunks
     val hashed = df.select(col(idCol).as("id"),
       simHash(col(textCol), nBits, shingleK, baseHash).as("sh"))
-    // one exchange, reused by the count guard and both join sides — see
-    // the minHashLsh comment (before-plan scanned the corpus 4×)
     val banded = hashed.select(col("id"), col("sh"),
       explode(array((0 until chunks).map { c =>
         struct(lit(c).as("chunk"),
           shiftright(col("sh"), c * width).bitwiseAND((1L << width) - 1).as("bucket"))
       }: _*)).as("bb"))
-      .select(col("id"), col("sh"), col("bb.chunk"), col("bb.bucket"))
-      .repartition(col("chunk"), col("bucket"))
-    val counts = banded.groupBy("chunk", "bucket").agg(count(lit(1)).as("n"))
-    val ok = banded.join(counts.filter(col("n") <= maxBucket).drop("n"),
-      Seq("chunk", "bucket"))
-    val a = ok.select(col("chunk"), col("bucket"), col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = ok.select(col("chunk"), col("bucket"), col("id").as("id_b"), col("sh").as("sh_b"))
-    a.join(b, Seq("chunk", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
+      .select(col("bb.chunk"), col("bb.bucket"), col("id"), col("sh"))
+    cappedGroupPairs(banded, Seq("chunk", "bucket"), maxBucket)
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).as("hamming"))
       .distinct()
   }
 
   /** Exact n-gram Jaccard similarity for candidate pairs: explode shingles,
-    * equi-join on shingle, |A∩B| / (|A|+|B|-|A∩B|). The shingle join is the
-    * scale path — never a cross join. `minJaccard` prunes output.
+    * pair the documents sharing each shingle, |A∩B| / (|A|+|B|-|A∩B|).
+    * Grouping on the shingle is the scale path — never a cross join.
+    * `minJaccard` prunes output.
     *
     * `maxShingleDocs` is the stop-shingle cap: a shingle present in d docs
-    * contributes d² join rows, so ubiquitous shingles dominate cost while
+    * contributes d² pair rows, so ubiquitous shingles dominate cost while
     * carrying no similarity signal (every web-scale dedup drops them).
     * d=100 caps per-shingle fan-out at 10^4 pairs; at d=1000 one common
     * trigram costs 10^6 and the join measured 128s vs ~2s on the same
@@ -186,22 +189,15 @@ object Dedup {
                    maxShingleDocs: Int = 100): DataFrame = {
     val sh = df.select(col(idCol).as("id"),
       array_distinct(TextAnalysis.shingles(col(textCol), k)).as("sh"))
-      .withColumn("n", size(col("sh")))
-    // one exchange on the shingle, reused by the stop-shingle count and
-    // both join sides — see the minHashLsh comment (the before-plan
-    // re-scanned and re-shingled the corpus per consumer)
-    val exploded = sh.select(col("id"), col("n"), explode(col("sh")).as("g"))
-      .repartition(col("g"))
-    // drop ubiquitous shingles (stop-shingles) — same hot-key guard as LSH
-    val freq = exploded.groupBy("g").agg(count(lit(1)).as("df"))
-    val pruned = exploded.join(freq
-      .filter(col("df") <= maxShingleDocs).drop("df"), Seq("g"))
-    val a = pruned.select(col("g"), col("id").as("id_a"), col("n").as("n_a"))
-    val b = pruned.select(col("g"), col("id").as("id_b"), col("n").as("n_b"))
-    a.join(b, Seq("g"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b", "n_a", "n_b")
+    // ids-only pairs: the set sizes join back after the count, so the
+    // quadratic pair stream carries two longs per row
+    val inter = cappedGroupPairs(sh.select(explode(col("sh")).as("g"), col("id")),
+        Seq("g"), maxShingleDocs)
+      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(count(lit(1)).as("inter"))
+    def sizes(side: String) =
+      sh.select(col("id").as(s"id_$side"), size(col("sh")).as(s"n_$side"))
+    inter.join(sizes("a"), "id_a").join(sizes("b"), "id_b")
       .withColumn("jaccard",
         col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")).cast("double"))
       .filter(col("jaccard") >= minJaccard)

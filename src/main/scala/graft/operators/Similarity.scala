@@ -90,9 +90,11 @@ object Similarity {
     * query against the full corpus — the IVF/LSH scale path.
     *
     * Scale shape: cosine is computed inside the band join (map-side, at
-    * most `bands` times per true pair), then candidates dedupe on
-    * `(query_id, cand_id)` with a plain hash aggregate — the embedding
-    * vectors are DROPPED before any exchange, so only ids+score shuffle. */
+    * most `bands` times per true pair) and the embedding vectors are
+    * DROPPED there, so the plan's one exchange moves ids+score only: the
+    * scored rows hash-partition on `query_id`, and both the dedupe of
+    * multi-band hits on `(query_id, cand_id)` and the per-query top-k
+    * window run over that partitioning. */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, k: Int, dims: Int,
               nPlanes: Int = 16, bands: Int = 4, seed: Int = 42): DataFrame = {
@@ -115,8 +117,8 @@ object Similarity {
       .filter(col("cand_id") =!= col("query_id"))
       .withColumn("cos", cosine(col("query_v"), col("cand_v")))
       .select("query_id", "cand_id", "cos")
-    // dedupe multi-band hits on ids only (first() — cos is identical
-    // across duplicates of a pair); vectors never reach this exchange
+      .repartition(col("query_id"))
+    // first(): cos is identical across the band hits of one pair
     val candidates = scored.groupBy("query_id", "cand_id")
       .agg(first(col("cos")).as("cos"))
     val w = org.apache.spark.sql.expressions.Window

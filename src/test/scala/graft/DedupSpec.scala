@@ -121,6 +121,75 @@ class DedupSpec extends SparkSpec {
         s"(head: ${falsePos.take(5)})")
   }
 
+  /** The corpus with three exact copies of each of its first 20 docs
+    * (ids +10000, +20000): every band bucket of those docs holds at least
+    * three members, so a cap of 2 drops buckets that pair real near-dups. */
+  private lazy val tripled = docs.select("doc_id", "text")
+    .unionByName(docs.filter(col("doc_id") < 20)
+      .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+    .unionByName(docs.filter(col("doc_id") < 20)
+      .select((col("doc_id") + 20000).as("doc_id"), col("text")))
+
+  /** Plain-Scala banded pairs under a bucket cap: members of every
+    * (band, key) group of at most `cap` members, paired with a < b. */
+  private def cappedBandPairs[K](keys: Map[Long, Seq[K]], cap: Int): Set[(Long, Long)] =
+    keys.toSeq.flatMap { case (id, ks) => ks.zipWithIndex.map { case (k, b) => (b, k) -> id } }
+      .groupBy(_._1).values.map(_.map(_._2).sorted)
+      .filter(_.size <= cap)
+      .flatMap(ids => for (a <- ids; b <- ids if a < b) yield (a, b))
+      .toSet
+
+  test("minHash-LSH bucket cap: pairs equal a plain-Scala capped banding") {
+    val (numHashes, bands, cap) = (16, 8, 2)
+    val r = numHashes / bands
+    val sigs = tripled.select(col("doc_id"),
+        Dedup.minHashSignature(col("text"), 3, numHashes).as("sig"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    // a band's bucket is a hash of its signature slots; banding on the
+    // slots themselves groups the same docs
+    val slots = sigs.map { case (id, s) => id -> s.grouped(r).toSeq }
+    val expected = cappedBandPairs(slots, cap)
+      .map { case (a, b) =>
+        (a, b) -> sigs(a).zip(sigs(b)).count { case (x, y) => x == y }.toDouble / numHashes }
+      .toMap
+    val got = Dedup.minHashLsh(tripled, "doc_id", "text", k = 3,
+        numHashes = numHashes, bands = bands, maxBucket = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(cappedBandPairs(slots, Int.MaxValue).size > expected.size,
+      "the cap must drop some bucket")
+    assert(got == expected,
+      s"missing=${expected.keySet -- got.keySet} extra=${got.keySet -- expected.keySet}")
+  }
+
+  test("simHash bucket cap: pairs equal a plain-Scala capped banding") {
+    val cap = 2
+    val sigs = tripled.select(col("doc_id"),
+        Dedup.simHash(col("text"), nBits = 64, shingleK = 2).as("sh"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def chunks(cap: Int) = cappedBandPairs(
+      sigs.map { case (id, h) => id -> (0 until 8).map(c => (h >>> (c * 8)) & 0xFF) }, cap)
+    val expected = chunks(cap)
+      .map { case (a, b) => (a, b) -> java.lang.Long.bitCount(sigs(a) ^ sigs(b)) }.toMap
+    val got = Dedup.simHashPairs(tripled, "doc_id", "text", nBits = 64, chunks = 8,
+        maxBucket = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    assert(chunks(Int.MaxValue).size > expected.size, "the cap must drop some bucket")
+    assert(got == expected,
+      s"missing=${expected.keySet -- got.keySet} extra=${got.keySet -- expected.keySet}")
+  }
+
+  test("ngramJaccard stop-shingle cap: a small maxShingleDocs equals the capped reference") {
+    val (minJ, cap) = (0.3, 3)
+    val want = truthPairs(minJ, maxDocs = cap)
+    assert(want.keySet != truthPairs(minJ).keySet, "the cap must change the pair set")
+    val got = Dedup.ngramJaccard(docs, "doc_id", "text", k = 3,
+        minJaccard = minJ, maxShingleDocs = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    assert(got.keySet == want.keySet,
+      s"missing=${want.keySet -- got.keySet} extra=${got.keySet -- want.keySet}")
+    got.foreach { case (k, v) => assert(math.abs(v - want(k)) < 1e-9, s"$k: $v vs ${want(k)}") }
+  }
+
   test("exact dedupe: canonical min-id per digest, counts preserved") {
     val dup = docs.select("doc_id", "text")
       .unionByName(docs.select((col("doc_id") + 10000).as("doc_id"), col("text")))

@@ -13,9 +13,9 @@ class PlanSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def plan(name: String): String = {
+  private def plan(name: String, mode: String = "formatted"): String = {
     val df: DataFrame = SparkEntry.queries(name)(spark, sf)
-    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    df.queryExecution.explainString(ExplainMode.fromString(mode))
   }
 
   test("s1 lookback scan: predicate and projection push into the parquet scan") {
@@ -152,13 +152,63 @@ class PlanSpec extends SparkSpec {
 
   test("ann lsh rerank dedupes on ids only — vectors never reach an exchange") {
     val p = plan("ann_lsh_bucketed")
-    // the only exchanges: pair-dedupe hash agg on (query_id, cand_id) and
-    // the window's top-k partitioning; vector columns appear in no
+    // the only exchange partitions the scored ids on query_id for the
+    // pair dedupe and the top-k window; vector columns appear in no
     // hashpartitioning clause
     assert(!p.toLowerCase.contains("hashpartitioning(query_v"), p)
     assert(!p.toLowerCase.contains("hashpartitioning(cand_v"), p)
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoop"),
       "band join should broadcast the small query side:\n" + p)
+  }
+
+  test("ann lsh: one hash exchange above the band join serves dedupe and top-k") {
+    // simple mode prints one line per plan node, its arguments inline
+    val t = plan("ann_lsh_bucketed", "simple")
+    val exchanges = t.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
+    assert(exchanges.size == 1, t)
+    assert(exchanges.head.contains("hashpartitioning(query_id"), t)
+    assert(t.indexOf("Exchange hashpartitioning") < t.indexOf("BroadcastHashJoin"),
+      "the exchange must sit above the band join:\n" + t)
+  }
+
+  test("dedup_minhash_lsh scans documents once and broadcasts no banded rows") {
+    val t = plan("dedup_minhash_lsh", "simple")
+    assert("Scan parquet".r.findAllIn(t).size == 1, t)
+    assert(!t.contains("BroadcastExchange"), t)
+    // the bucket cap and the member gather share one (band, bucket) exchange
+    assert("hashpartitioning\\(band".r.findAllIn(t).size == 1, t)
+  }
+
+  test("SparkEntry.t starts no Spark job and resolves Spark's own schema") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tables = new java.io.File(sf).listFiles().map(_.getName)
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted.toSeq
+    assert(tables.size >= 10, tables)
+    val marker = "PlanSpec marker job"
+    val others = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.job.description") == marker))
+          markerSeen.countDown()
+        else others.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val resolved =
+      try {
+        val r = tables.map(n => n -> SparkEntry.t(spark, sf, n).schema)
+        // the bus delivers events in order: once the marker job's start
+        // arrives, every job started before it has been counted
+        sc.setJobDescription(marker)
+        try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+        assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        r
+      } finally sc.removeSparkListener(listener)
+    assert(others.get == 0, s"${others.get} Spark job(s) started while resolving tables")
+    resolved.foreach { case (n, st) =>
+      assert(st == spark.read.parquet(s"$sf/$n.parquet").schema, n)
+    }
   }
 
   /** The keys a domain at epoch 0 consumes to reach the source's head at
