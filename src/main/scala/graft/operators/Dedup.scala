@@ -126,8 +126,8 @@ object Dedup {
     val k = keys.map(col)
     val members = struct(rows.columns.toSeq.filterNot(keys.contains).map(col): _*)
     rows.filter(k.map(_.isNotNull).reduce(_ && _))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy(k: _*)))
-      .filter(col("n") <= cap)
+      .withColumn("group_size", count(lit(1)).over(Window.partitionBy(k: _*)))
+      .filter(col("group_size") <= cap)
       .groupBy(k: _*).agg(collect_list(members).as("m"))
       .filter(size(col("m")) > 1)
       .select(explode(col("m")).as("a"), col("m"))
@@ -189,15 +189,14 @@ object Dedup {
                    maxShingleDocs: Int = 100): DataFrame = {
     val sh = df.select(col(idCol).as("id"),
       array_distinct(TextAnalysis.shingles(col(textCol), k)).as("sh"))
-    // ids-only pairs: the set sizes join back after the count, so the
-    // quadratic pair stream carries two longs per row
-    val inter = cappedGroupPairs(sh.select(explode(col("sh")).as("g"), col("id")),
+    // the set size rides in the member struct, so the pair count carries
+    // both sizes and the input is scanned and shingled once
+    cappedGroupPairs(
+        sh.select(explode(col("sh")).as("g"), col("id"), size(col("sh")).as("n")),
         Seq("g"), maxShingleDocs)
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        col("a.n").as("n_a"), col("b.n").as("n_b"))
       .agg(count(lit(1)).as("inter"))
-    def sizes(side: String) =
-      sh.select(col("id").as(s"id_$side"), size(col("sh")).as(s"n_$side"))
-    inter.join(sizes("a"), "id_a").join(sizes("b"), "id_b")
       .withColumn("jaccard",
         col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")).cast("double"))
       .filter(col("jaccard") >= minJaccard)

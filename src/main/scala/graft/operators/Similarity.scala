@@ -94,7 +94,14 @@ object Similarity {
     * DROPPED there, so the plan's one exchange moves ids+score only: the
     * scored rows hash-partition on `query_id`, and both the dedupe of
     * multi-band hits on `(query_id, cand_id)` and the per-query top-k
-    * window run over that partitioning. */
+    * window run over that partitioning.
+    *
+    * Trade-off: the exchange sits below the dedupe, so no map-side partial
+    * aggregate removes repeat band hits first and up to `bands` rows per
+    * true pair cross it, where a plain aggregate would shuffle deduped rows
+    * twice. The one-exchange shape was measured faster only on small
+    * inputs (sf0.001 embeddings, 5 queries), where stage count dominates;
+    * on a large corpus with many queries the two-exchange shape may win. */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, k: Int, dims: Int,
               nPlanes: Int = 16, bands: Int = 4, seed: Int = 42): DataFrame = {

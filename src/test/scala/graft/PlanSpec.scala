@@ -179,6 +179,12 @@ class PlanSpec extends SparkSpec {
     assert("hashpartitioning\\(band".r.findAllIn(t).size == 1, t)
   }
 
+  test("dedup_ngram_jaccard scans documents once and joins no set sizes back") {
+    val t = plan("dedup_ngram_jaccard", "simple")
+    assert("Scan parquet".r.findAllIn(t).size == 1, t)
+    assert(!t.contains("Join"), t)
+  }
+
   test("SparkEntry.t starts no Spark job and resolves Spark's own schema") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
