@@ -56,35 +56,8 @@ object BenchReplay {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     graft.lake.FastLocalFs.sparkConf.foreach { case (k, v) => b.config(k, v) }
-    // experiment knob: GRAFT_SPARK_CONF="k=v;k2=v2" extra session confs
-    sys.env.get("GRAFT_SPARK_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); b.config(k.trim, v.trim)
-      })
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.get("GRAFT_STAGE_TIMING").contains("1"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val i = sc.stageInfo
-            val wall = (i.completionTime.getOrElse(0L) -
-              i.submissionTime.getOrElse(0L)) / 1e3
-            val run = i.taskMetrics.executorRunTime / 1e3
-            val cpu = i.taskMetrics.executorCpuTime / 1e9
-            val gc = i.taskMetrics.jvmGCTime / 1e3
-            System.err.println(f"[stage ${i.stageId}%3d] ${i.name.take(30)}%-30s " +
-              f"tasks=${i.numTasks}%3d wall=$wall%6.2fs run=$run%7.2fs " +
-              f"cpu=$cpu%7.2fs gc=$gc%6.2fs")
-          }
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            System.err.println(s"[job ${js.jobId} start t=${js.time}]")
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-            System.err.println(s"[job ${je.jobId} end   t=${je.time}]")
-        })
     try {
       // Task-metric totals (cumulative). CPU-seconds is the window-robust
       // scaling signal: a work-conserving plan does the SAME total work at

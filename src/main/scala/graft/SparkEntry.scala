@@ -804,18 +804,14 @@ object SparkEntry {
         lit(1).as("schemaVersion"))
 
   /** RAM-backed scratch root for the pipeline probes' throwaway lakes —
-    * same policy as the bench launcher (GRAFT_TMPDIR, else /dev/shm when
-    * present, else java.io.tmpdir): the probes replay ~20 tiny Spark jobs
+    * the shuffle scratch rule of [[graft.lake.FastLocalFs.localScratch]],
+    * else java.io.tmpdir: the probes replay ~20 tiny Spark jobs
     * whose wall is dominated by small-file create/close churn, which on
     * the single local disk measures 2-3× tmpfs. Placement only — the
     * probe still computes everything from the parquet inputs. */
   private def scratchTempDir(prefix: String): String = {
-    val base = sys.env.get("GRAFT_TMPDIR")
-      .orElse(if (java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get("/dev/shm"))) Some("/dev/shm/graft-local")
-      else None)
+    val base = graft.lake.FastLocalFs.localScratch
       .getOrElse(System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
     java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(base), prefix).toString
   }

@@ -622,31 +622,28 @@ object Pipeline {
   }
 
   /** Upper bound on the distinct source keys touched in epochs
-    * `(fromExclusive, to]` — read from the source manifest's per-epoch
-    * lineage (`keys=N` = distinct merge keys after within-batch
-    * compaction), costing no Spark job. Any epoch missing from the
-    * registry (truncated below the lineage floor, or never committed)
+    * `(fromExclusive, to]` — read from the per-epoch lineage of the source
+    * manifest `m` (`keys=N` = distinct merge keys after within-batch
+    * compaction), costing no Spark job and no log read. Any epoch missing
+    * from the registry (truncated below the lineage floor, or never committed)
     * returns `Long.MaxValue` — unknown means the scale-safe distributed
     * regime, never a blind broadcast. A PRESENT entry that fails to parse
     * throws (format drift is loud, never a silent all-distributed
     * slowdown — [[graft.lake.EpochLineage]] is the single format/parse
     * pair). */
-  private[graft] def affectedKeyBound(source: LakeTable,
-      fromExclusive: Long, to: Long): Long =
-    source.currentManifest match {
-      case None => Long.MaxValue
-      case Some(m) =>
-        var sum = 0L
-        var e = fromExclusive + 1
-        while (e <= to) {
-          m.lineage.get(s"epoch_$e") match {
-            case Some(entry) => sum += graft.lake.EpochLineage.keysOf(entry)
-            case None => return Long.MaxValue
-          }
-          e += 1
-        }
-        sum
+  private[graft] def affectedKeyBound(m: Manifest, fromExclusive: Long,
+      to: Long): Long = {
+    var sum = 0L
+    var e = fromExclusive + 1
+    while (e <= to) {
+      m.lineage.get(s"epoch_$e") match {
+        case Some(entry) => sum += graft.lake.EpochLineage.keysOf(entry)
+        case None => return Long.MaxValue
+      }
+      e += 1
     }
+    sum
+  }
 
   /** The source keys whose state may differ between versions `preV` and
     * `postV`, with the source buckets they hash to and the size-gate
@@ -675,7 +672,7 @@ object Pipeline {
     val files = commits.flatMap(_._2)
     val keySchema = StructType(hiM.keyCols.map(hiM.schema(_)))
     val scan = spark.read.schema(keySchema).parquet(files.map(_.path): _*)
-    val small = affectedKeyBound(source,
+    val small = affectedKeyBound(hiM,
       source.readManifest(lo).epochWatermark, hiM.epochWatermark) <=
       broadcastGroupLimit
     val keys =

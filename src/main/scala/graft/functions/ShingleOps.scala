@@ -137,7 +137,10 @@ object ShingleUtil {
     *    trailing whitespace, so `"the the"` (single spaces) counts ONCE —
     *    the kernel advances j by L+2 on a match for exactly this reason;
     *  - the leading/trailing pad spaces are virtual (index -1 and n read
-    *    as ' '), so no per-row concat allocation.
+    *    as ' '), so no per-row concat allocation;
+    *  - NULL text: the identity holds only under ANSI mode (Spark 4's
+    *    default). Without it `size(null)` is -1, so the split form gives
+    *    -2 where the kernel returns NULL under either setting.
     * `word` must be non-empty with no ASCII-whitespace bytes (true of
     * every marker; enforced at expression construction). */
   def stopwordCount(s: UTF8String, word: Array[Byte]): Int = {
@@ -171,7 +174,9 @@ object ShingleUtil {
     * non-space whitespace run still separates an empty part, which is why
     * the run count alone reproduces split's quirks (e.g. "\tfoo" → 2).
     * Callers keep the `when(length(trim(s)) = 0, 0)` gate outside, as the
-    * Column form does. Fuzz-pinned in StopwordCountSpec. */
+    * Column form does. Fuzz-pinned in StopwordCountSpec. As for
+    * [[stopwordCount]], NULL text matches the split form only under ANSI
+    * mode. */
   def wsTokenCount(s: UTF8String): Int = {
     val b = s.trim().getBytes
     var runs = 0
@@ -402,6 +407,8 @@ object StopwordCount {
   }
 }
 
+/** string → int kernel: NULL in, NULL out (UnaryExpression's null-safe
+  * eval), whatever `spark.sql.ansi.enabled` says. */
 private[functions] trait StringToIntKernel extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {

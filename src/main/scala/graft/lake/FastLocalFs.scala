@@ -55,7 +55,7 @@ object FastLocalFs {
     * pipeline probes inside DiskBlockObjectWriter on /tmp); a real
     * cluster points spark.local.dir at its fast local disks the same way
     * — and does not configure this shim at all. */
-  private def localScratch: Option[String] =
+  private[graft] def localScratch: Option[String] =
     sys.env.get("GRAFT_TMPDIR").orElse {
       if (java.nio.file.Files.isDirectory(
           java.nio.file.Paths.get("/dev/shm")))

@@ -91,7 +91,6 @@ final case class Manifest(
                                   // applied (ChangeFeed guards on this)
 ) {
   def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-  def baseFiles: Seq[ManifestFile] = files.filter(_.tier == "base")
   def deltaFiles: Seq[ManifestFile] = files.filter(_.tier == "delta")
   /** Feed-side alias map: former physical/feed name → canonical name. */
   def feedAliases: Map[String, String] =

@@ -212,9 +212,4 @@ object Maintenance {
     if (hot.isEmpty) None
     else compact(spark, table, tombstoneWatermark, Some(hot))
   }
-
-  /** Back-compat alias: tombstone GC is compaction with a watermark. */
-  def compactTombstones(spark: SparkSession, table: LakeTable,
-                        watermark: Long): Option[Manifest] =
-    compact(spark, table, watermark)
 }

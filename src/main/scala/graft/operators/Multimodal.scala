@@ -143,22 +143,4 @@ object Multimodal {
         }
       }
   }
-
-  /** Frame sampling plan for video rows: which frame indices to decode,
-    * computed from metadata only (no payload access — stays pushdown-
-    * friendly: at scale this runs before any byte is fetched). */
-  def frameSamplePlan(media: DataFrame, everyMs: Long): DataFrame =
-    media.filter(col("kind") === "video")
-      .select(col("media_id"), col("duration_ms"),
-        sequence(lit(0L), col("duration_ms"), lit(everyMs)).as("sample_ms"))
-      .withColumn("n_frames", size(col("sample_ms")))
-
-  /** Resize spec: target box preserving aspect ratio — metadata-only math. */
-  def resizePlan(media: DataFrame, maxSide: Int): DataFrame = {
-    val scale = least(lit(maxSide.toDouble) / col("width"),
-      lit(maxSide.toDouble) / col("height"), lit(1.0))
-    media.select(col("media_id"), col("width"), col("height"),
-      round(col("width") * scale).cast("int").as("out_width"),
-      round(col("height") * scale).cast("int").as("out_height"))
-  }
 }

@@ -43,14 +43,6 @@ object Relational {
                 joinType: String = "left"): DataFrame =
     fact.join(broadcast(dim), cond, joinType)
 
-  /** J6/O2 — deterministic TOP-1 correlated lookup, decorrelated: aggregate
-    * the lookup side to one row per key with min_by, then broadcast-join.
-    * (house style note 6, /root/reference/MQ/mosaiq_person.sql:23-27) */
-  def top1Lookup(lookup: DataFrame, key: String, valueCol: String,
-                 orderCol: String): DataFrame =
-    lookup.groupBy(key)
-      .agg(min_by(col(valueCol), col(orderCol)).as(valueCol))
-
   /** P8 — deterministic hash sampling `ABS(CHECKSUM(id) % 10) = 0`
     * (/root/reference/Delphi/MSSQL_Vertica_Translations/
     *  OMOP_Incremental_Observation.sql:179). Mod-on-id keeps the sample

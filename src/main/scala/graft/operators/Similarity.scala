@@ -16,20 +16,10 @@ import org.apache.spark.sql.functions._
   *    reranks within buckets, and only `(query_id, cand_id, cos)` ever
   *    shuffles — the wide vectors stay map-side.
   *
-  * All vector math is `zip_with`/`aggregate` Column expressions — no UDF,
-  * no Python. HOF lambdas are interpreted, so every expensive term is an
-  * argument (evaluated once), never a capture (re-evaluated per element).
+  * All vector math runs in native codegen'd Catalyst expressions
+  * (`graft.functions`) — no UDF, no Python.
   */
 object Similarity {
-
-  /** dot(a,b) as a Column over two array<float/double> columns. (HOF form,
-    * kept for composition; the hot cosine path uses the native fused
-    * expression below.) */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity — the native codegen'd [[graft.functions.CosineSim]]
     * (one fused loop: dot + both norms). The equivalent

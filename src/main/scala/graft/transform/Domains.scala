@@ -109,24 +109,4 @@ object Domains {
       ("markdown", "Markdown document"), ("yaml", "YAML config")
     ).toDF("lang", "lang_name")
   }
-
-  /** Dependency-ordered multi-domain run (C3: "Visit Occurrence must
-    * complete before Visit Detail", ArchitecturePlan.md:51-68): person →
-    * visit → {condition, drug, measurement}. Spark's lazy DAG makes the
-    * ordering a correctness statement about REFERENCES (downstream domains
-    * may consume upstream results), not a scheduling concern. */
-  def runAll(spark: SparkSession, snapshot: DataFrame): Map[String, DataFrame] = {
-    val snap = snapshot
-    val person = personLike(snap)
-    val visit = visitChain(snap)
-    val condition = conditionLike(snap)
-    val drug = drugLike(snap)
-    val measurement = measurementLike(snap, langDimension(spark))
-    Map(
-      "person" -> person,
-      "visit_occurrence" -> visit,
-      "condition_occurrence" -> condition,
-      "drug_exposure" -> drug,
-      "measurement" -> measurement)
-  }
 }

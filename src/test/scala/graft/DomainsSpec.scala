@@ -104,11 +104,4 @@ class DomainsSpec extends SparkSpec {
     assert(got == exp)
     assert(got.nonEmpty && got.size < oracleRows.size) // a real subsample
   }
-
-  test("runAll returns all five dependency-ordered domains, all non-empty") {
-    val all = Domains.runAll(spark, snapshot)
-    assert(all.keySet == Set("person", "visit_occurrence",
-      "condition_occurrence", "drug_exposure", "measurement"))
-    all.foreach { case (name, df) => assert(df.count() > 0, name) }
-  }
 }

@@ -104,22 +104,6 @@ class MultimodalSpec extends SparkSpec {
     assert(viaUdfPath.except(viaExpr).isEmpty && viaExpr.except(viaUdfPath).isEmpty)
   }
 
-  test("frameSamplePlan and resizePlan are metadata-only math") {
-    val m = Seq((1L, "video", Array[Byte](1), 100, 50, 1000L),
-                (2L, "image", Array[Byte](2), 1920, 1080, 0L))
-      .toDF("media_id", "kind", "payload", "width", "height", "duration_ms")
-    val fs = Multimodal.frameSamplePlan(m, everyMs = 250)
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](2), r.getInt(3)))
-    assert(fs.toSeq == Seq((1L, Seq(0L, 250L, 500L, 750L, 1000L), 5)))
-    val rs = Multimodal.resizePlan(m, maxSide = 640)
-      .collect().map(r => r.getLong(0) -> (r.getInt(3), r.getInt(4))).toMap
-    assert(rs(2L) == (640, 360))
-    assert(rs(1L) == (100, 50)) // never upscale
-    // neither plan touches the payload column
-    val plan = Multimodal.frameSamplePlan(m, 250).queryExecution.optimizedPlan.toString
-    assert(!plan.contains("payload"))
-  }
-
   test("multimodal_features query output pins the feature vector (rows+sig)") {
     val out = SparkEntry.queries("multimodal_features")(spark, "/root/testdata/sf0.001")
     val rows = out.collect()

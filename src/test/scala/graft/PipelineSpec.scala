@@ -279,11 +279,12 @@ class PipelineSpec extends SparkSpec {
       ChangeEvent(4, 1, "U", "r1", "a.scala", "c4", "scala", "z", 1),
       ChangeEvent(5, 1, "I", "r2", "d.go", "c5", "go", "x", 1)
     ).toDF(), 1L)
-    assert(Pipeline.affectedKeyBound(source, -1L, 0L) == 3L)
-    assert(Pipeline.affectedKeyBound(source, -1L, 1L) == 5L)
-    assert(Pipeline.affectedKeyBound(source, 0L, 1L) == 2L)
+    val m = source.currentManifest.get
+    assert(Pipeline.affectedKeyBound(m, -1L, 0L) == 3L)
+    assert(Pipeline.affectedKeyBound(m, -1L, 1L) == 5L)
+    assert(Pipeline.affectedKeyBound(m, 0L, 1L) == 2L)
     // an epoch absent from the registry → unknown → scale-safe MaxValue
-    assert(Pipeline.affectedKeyBound(source, 1L, 2L) == Long.MaxValue)
+    assert(Pipeline.affectedKeyBound(m, 1L, 2L) == Long.MaxValue)
   }
 
   test("EpochLineage format/parse round-trips; a drifted entry is loud, " +

@@ -97,6 +97,20 @@ class StopwordCountSpec extends AnyFunSuite {
     }
   }
 
+  test("NULL in, NULL out under spark.sql.ansi.enabled=true and =false") {
+    val key = "spark.sql.ansi.enabled"
+    val prior = spark.conf.getOption(key)
+    try Seq("true", "false").foreach { ansi =>
+      spark.conf.set(key, ansi)
+      val r = frame(Seq(null)).select(StopwordCount(col("s"), "the"),
+        WsTokenCount(col("s")), NonWsCharCount(col("s")),
+        size(split(col("s"), "\\s+"))).collect()(0)
+      assert((0 to 2).forall(r.isNullAt), s"ansi=$ansi: kernels gave $r")
+      // the split form the kernels replace is NULL only under ANSI
+      assert(r.isNullAt(3) == (ansi == "true"), s"ansi=$ansi: split gave $r")
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("pinned: consecutive single-space markers count every OTHER one") {
     // Pattern.split consumes the trailing space: " the the the " → 2
     import scala.jdk.CollectionConverters._
